@@ -106,14 +106,13 @@ def dianncfg_cmd(enzyme, fix_mod, var_mod, out_dir):
 @click.option("--parser", default="auto", type=click.Choice(["auto", "pyopenms", "xml", "synthetic"]))
 @click.option("--master", default=None)
 def mzmlstats_cmd(ms_path, ms2_file, feature_detection, feature_method, out_dir, parser, master):
-    from pathlib import Path
-
     from quantms_utils_spark.pipelines.mzml_stats import write_tables
     from quantms_utils_spark.sources.mzml import read_spectra
+    from quantms_utils_spark.sources.runfiles import run_stem
 
     spark = _spark(master)
     spectra = read_spectra(spark, list(ms_path), parser=parser)
-    stem = Path(ms_path[0]).name.split(".")[0] if len(ms_path) == 1 else "combined"
+    stem = run_stem(ms_path[0]) if len(ms_path) == 1 else "combined"
     outputs = write_tables(
         spectra, out_dir, stem, ms2_file=ms2_file,
         feature_detection=feature_detection, feature_method=feature_method,
@@ -130,16 +129,15 @@ def mzmlstats_cmd(ms_path, ms2_file, feature_detection, feature_method, out_dir,
 @click.option("--parser", default="auto", type=click.Choice(["auto", "pyopenms", "xml", "synthetic"]))
 @click.option("--master", default=None)
 def psmconvert_cmd(idxml, ms2_file, export_decoy_psm, out_dir, parser, master):
-    from pathlib import Path
-
     from quantms_utils_spark.pipelines.psm import convert_psms
     from quantms_utils_spark.sources.idxml import read_identifications
+    from quantms_utils_spark.sources.runfiles import run_stem
 
     spark = _spark(master)
     ids = read_identifications(spark, list(idxml), parser=parser)
     ms2 = spark.read.parquet(ms2_file) if ms2_file else None
     psms = convert_psms(ids, ms2, export_decoy_psm=export_decoy_psm)
-    stem = Path(idxml[0]).name.split(".")[0]
+    stem = run_stem(idxml[0])
     target = f"{out_dir}/{stem}_psm.parquet"
     psms.write.mode("overwrite").parquet(target, compression="zstd")
     click.echo(f"psm: {target} rows={spark.read.parquet(target).count()}")

@@ -12,14 +12,15 @@ parser of the public OpenMS idXML format — real file bytes, no C++);
 ``synthetic`` generates deterministic identifications whose scan numbers
 reference the synthetic mzML spectra of the same stem (same seed
 derivation), so the PSM↔spectrum join (J4) is exercised end-to-end without
-any input files. ``auto`` = pyopenms > xml (if the file exists) > synthetic.
+any input files. ``auto`` = pyopenms when importable, else xml; a missing
+file raises ValueError on the driver. Resolution, stems and the per-file
+plumbing are shared with the mzML reader (``sources/runfiles.py``).
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator, Sequence
-from pathlib import Path
+from collections.abc import Sequence
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -31,6 +32,13 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+)
+
+from quantms_utils_spark.sources.runfiles import (
+    map_run_files,
+    resolve_parser,
+    run_stem,
+    stem_seed,
 )
 
 HIT_SCHEMA = StructType(
@@ -61,24 +69,13 @@ PSM_ID_SCHEMA = StructType(
     ]
 )
 
-try:  # pragma: no cover - environment-dependent
-    import pyopenms  # noqa: F401
-
-    HAVE_PYOPENMS = True
-except Exception:  # pragma: no cover
-    HAVE_PYOPENMS = False
-
 _RESIDUES = "ACDEFGHIKLMNPQRSTVWY"
-
-
-def _stem_seed(stem: str) -> int:
-    return int.from_bytes(hashlib.sha256(stem.encode()).digest()[:4], "big")
 
 
 def synthetic_identifications(stem: str, n_ids: int = 60) -> pd.DataFrame:
     """Deterministic fake identifications aligned with
     sources.mzml.synthetic_spectra(stem): MS2 scans are 1000+i for i % 4 != 0."""
-    rng = np.random.RandomState(_stem_seed(stem) ^ 0x5A5A)
+    rng = np.random.RandomState(stem_seed(stem) ^ 0x5A5A)
     engines = ["Comet"] if rng.rand() < 0.5 else ["MS-GF+", "Comet"]
     multi = len(engines) > 1
     # ConsensusID runs usually carry a 'q-value' score type after FDR, but
@@ -139,41 +136,21 @@ def read_identifications(
     parser: str = "auto",
 ) -> DataFrame:
     """Nested identifications DataFrame; one partition per idXML file."""
-    if parser == "auto":
-        if HAVE_PYOPENMS:  # pragma: no cover - needs pyopenms
-            parser = "pyopenms"
-        else:
-            parser = "xml" if paths and Path(paths[0]).exists() else "synthetic"
-    if parser not in ("pyopenms", "xml", "synthetic"):
-        raise ValueError(f"unknown parser {parser!r}")
-    if parser == "pyopenms" and not HAVE_PYOPENMS:  # pragma: no cover
-        raise NotImplementedError(
-            "pyopenms is not importable; use parser='xml' (pure-Python idXML "
-            "parsing) or 'synthetic'"
-        )
+    parse_file = partial(parse_idxml_file, parser=resolve_parser(parser, paths))
+    return map_run_files(
+        spark, paths, parse_file, PSM_ID_SCHEMA, "read_identifications"
+    )
 
-    if not paths:
-        raise ValueError(
-            "read_identifications: paths must be non-empty (an empty run list "
-            "is a caller bug; repartition(0) would raise a cryptic "
-            "engine error instead)"
-        )
-    paths_df = spark.createDataFrame(
-        [(p,) for p in paths], schema="path string"
-    ).repartition(len(paths), "path")
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                stem = Path(path).name.split(".")[0]
-                if parser == "pyopenms":  # pragma: no cover - needs pyopenms
-                    yield _parse_pyopenms_idxml(path)
-                elif parser == "xml":
-                    yield _parse_xml_idxml(path)
-                else:
-                    yield synthetic_identifications(stem)
-
-    return paths_df.mapInPandas(parse, schema=PSM_ID_SCHEMA)
+def parse_idxml_file(path: str, parser: str) -> pd.DataFrame:
+    """One idXML file as a PSM_ID_SCHEMA frame; ``parser`` is a value
+    returned by ``resolve_parser``. Shared by ``read_identifications`` and
+    ``format("idxml")``."""
+    if parser == "synthetic":
+        return synthetic_identifications(run_stem(path))
+    if parser == "xml":
+        return _parse_xml_idxml(path)
+    return _parse_pyopenms_idxml(path)  # pragma: no cover - needs pyopenms
 
 
 def _parse_xml_idxml(path: str) -> pd.DataFrame:
@@ -190,8 +167,8 @@ def _parse_xml_idxml(path: str) -> pd.DataFrame:
     before the runs that reference them, and files are identification
     lists, typically MBs — not the multi-GB peak data mzML holds, which is
     why the mzML twin streams via iterparse and this one deliberately does
-    not). The expat second parser (`idxml_datasource`) is the
-    producer-independent cross-check.
+    not). The expat interpreter in `tests/test_independent_parity_idxml.py`
+    is the producer-independent cross-check.
     """
     from xml.etree.ElementTree import parse as etree_parse
 
@@ -239,8 +216,7 @@ def _parse_xml_idxml(path: str) -> pd.DataFrame:
                 spectra_data = up.get("value", "").strip("[]").split(",")[0].strip()
         if spectra_data is None:
             raise ValueError(f"No spectra_data entry found in {path}")
-        # Stem derivation MUST match sources/mzml.py (see _parse_pyopenms_idxml)
-        ref = Path(spectra_data).name.split(".")[0]
+        ref = run_stem(spectra_data)
 
         for pid in run.iter("PeptideIdentification"):
             hits = []
@@ -306,13 +282,8 @@ def _parse_pyopenms_idxml(path: str) -> pd.DataFrame:  # pragma: no cover
         ]
     else:
         engines = [prot_ids[0].getSearchEngine()]
-    # Stem derivation MUST match sources/mzml.py (`Path(p).name.split('.')[0]`)
-    # — the PSM↔spectrum join keys on reference_file_name equality, and
-    # os.path.splitext would keep the directory and only one extension
-    # ('/data/run.mzML' -> '/data/run' vs the mzML side's 'run'), silently
-    # joining zero peak rows.
     spectra_path = prot_ids[0].getMetaValue("spectra_data")[0].decode("UTF-8")
-    ref = Path(spectra_path).name.split(".")[0]
+    ref = run_stem(spectra_path)
     rows = []
     for pid in pep_ids:
         hits = []

@@ -1,237 +1,39 @@
 """`spark.read.format("idxml")` — a PySpark Python DataSource for idXML
-identification files, completing the registrable-source surface next to
-``format("mzml")`` (`sources/mzml_datasource.py`).
+identification files, next to ``format("mzml")``
+(`sources/mzml_datasource.py`).
 
-Pushdown here is FILE PRUNING: identifications key on
-``reference_file_name`` (the run stem the PSM↔spectrum join uses —
-reference psm/psm_conversion.py:87-108), and one idXML file carries one
-run's identifications, so an equality/IN predicate on the stem skips
-whole files before a byte is parsed — the source-level analogue of hive
-partition pruning. Retention-time range predicates evaluate row-level
-inside the source. One ``InputPartition`` per file; Arrow RecordBatch
-reads; the parse path is shared with ``sources/idxml.py`` (pyopenms
-gated, pure-Python XML, synthetic).
+Retention-time range predicates evaluate row-level inside the source;
+every other predicate, ``reference_file_name`` included, goes back to
+Spark. That column comes from the ``spectra_data`` entry inside the file,
+not from the file name (``runA_comet.idXML`` holds run ``runA``), so it
+cannot prune files. Partitioning, Arrow conversion and the high-water-mark
+stream reader are the shared run-file core in ``sources/runfiles.py``; the
+per-file parse is ``parse_idxml_file``, the same one
+``sources/idxml.py:read_identifications`` runs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
-from pathlib import Path
+import pandas as pd
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    InputPartition,
-    LessThan,
-    LessThanOrEqual,
-)
-from pyspark.sql.types import StructType
-
-from quantms_utils_spark.sources.idxml import (
-    HAVE_PYOPENMS,
-    PSM_ID_SCHEMA,
-    _parse_xml_idxml,
-    synthetic_identifications,
+from quantms_utils_spark.sources.idxml import PSM_ID_SCHEMA, parse_idxml_file
+from quantms_utils_spark.sources.runfiles import (
+    RunFileDataSource,
+    RunFileReader,
+    register_source,
 )
 
 
-def _stem(path: str) -> str:
-    # MUST match sources/mzml.py stem policy (single split on first dot)
-    return Path(path).name.split(".")[0]
+class IdxmlDataSourceReader(RunFileReader):
+    format_name = "idxml"
+    suffixes = (".idxml",)
+    rt_column = "retention_time"
+
+    def parse(self, path: str) -> pd.DataFrame:
+        return parse_idxml_file(path, self.parser)
 
 
-class IdxmlInputPartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
-class IdxmlDataSourceReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict):
-        self.schema = schema
-        raw = options.get("paths") or options.get("path")
-        if not raw:
-            raise ValueError(
-                "idxml source needs .load(path) or .option('paths', ...)"
-            )
-        self.paths = self._expand(raw)
-        parser = options.get("parser", "auto")
-        if parser == "auto":
-            if HAVE_PYOPENMS:  # pragma: no cover - needs pyopenms
-                parser = "pyopenms"
-            else:
-                parser = "xml" if Path(self.paths[0]).exists() else "synthetic"
-        if parser not in ("pyopenms", "xml", "synthetic"):
-            raise ValueError(f"unknown parser {parser!r}")
-        self.parser = parser
-        # pushed-down predicate state
-        self.stems: list[str] | None = None
-        self.rt_min: tuple[float, bool] | None = None
-        self.rt_max: tuple[float, bool] | None = None
-
-    @staticmethod
-    def _expand(raw: str) -> list[str]:
-        out: list[str] = []
-        for token in raw.split(","):
-            token = token.strip()
-            if not token:
-                continue
-            p = Path(token)
-            if p.is_dir():
-                for pattern in ("*.idXML", "*.idxml"):
-                    out.extend(sorted(str(c) for c in p.glob(pattern)))
-            elif any(ch in token for ch in "*?["):
-                out.extend(sorted(str(c) for c in p.parent.glob(p.name)))
-            else:
-                out.append(token)
-        if not out:
-            raise ValueError(f"idxml source resolved no files from {raw!r}")
-        return out
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """Claim reference_file_name equality/IN (whole-file pruning) and
-        retention_time range bounds; one filter per slot (same
-        conjunction-safety contract as the mzml source), everything else
-        back to Spark."""
-        for f in filters:
-            col = f.attribute[0] if getattr(f, "attribute", None) else None
-            if (
-                col == "reference_file_name"
-                and isinstance(f, EqualTo)
-                and self.stems is None
-            ):
-                self.stems = [str(f.value)]
-            elif (
-                col == "reference_file_name"
-                and isinstance(f, In)
-                and self.stems is None
-            ):
-                self.stems = sorted(str(v) for v in f.value)
-            elif (
-                col == "retention_time"
-                and isinstance(f, (GreaterThan, GreaterThanOrEqual))
-                and self.rt_min is None
-            ):
-                self.rt_min = (float(f.value), isinstance(f, GreaterThanOrEqual))
-            elif (
-                col == "retention_time"
-                and isinstance(f, (LessThan, LessThanOrEqual))
-                and self.rt_max is None
-            ):
-                self.rt_max = (float(f.value), isinstance(f, LessThanOrEqual))
-            else:
-                yield f
-
-    def partitions(self) -> Sequence[InputPartition]:
-        paths = self.paths
-        if self.stems is not None:
-            # file pruning: the stem predicate eliminates whole partitions
-            keep = set(self.stems)
-            paths = [p for p in paths if _stem(p) in keep]
-        return [IdxmlInputPartition(p) for p in paths]
-
-    def read(self, partition: IdxmlInputPartition):
-        import pyarrow as pa
-
-        if self.parser == "pyopenms":  # pragma: no cover - needs pyopenms
-            from quantms_utils_spark.sources.idxml import _parse_pyopenms_idxml
-
-            pdf = _parse_pyopenms_idxml(partition.path)
-        elif self.parser == "xml":
-            pdf = _parse_xml_idxml(partition.path)
-        else:
-            pdf = synthetic_identifications(_stem(partition.path))
-        if self.stems is not None:
-            pdf = pdf[pdf["reference_file_name"].isin(self.stems)]
-        if self.rt_min is not None:
-            bound, incl = self.rt_min
-            pdf = (
-                pdf[pdf["retention_time"] >= bound]
-                if incl
-                else pdf[pdf["retention_time"] > bound]
-            )
-        if self.rt_max is not None:
-            bound, incl = self.rt_max
-            pdf = (
-                pdf[pdf["retention_time"] <= bound]
-                if incl
-                else pdf[pdf["retention_time"] < bound]
-            )
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        # hits is a list<struct<…>> column of Python dicts — pandas
-        # inference alphabetizes struct fields and widens ints, and Arrow
-        # refuses to cast re-ordered nested structs, so build each column
-        # against the declared type directly instead of cast-after-infer.
-        target = to_arrow_schema(self.schema)
-        arrays = [
-            pa.array(pdf[name].tolist(), type=target.field(name).type)
-            for name in target.names
-        ]
-        table = pa.Table.from_arrays(arrays, schema=target)
-        yield from table.to_batches(max_chunksize=10_000)
-
-
-class IdxmlStreamReader(DataSourceStreamReader):
-    """Continuous ingestion of newly-landed idXML files — same
-    lexicographic high-water-mark offset contract as the mzml
-    streamReader (immutable landings, monotone names; late out-of-order
-    names are deterministically ignored)."""
-
-    def __init__(self, schema: StructType, options: dict):
-        self.schema = schema
-        self.options = options
-        self.raw = options.get("paths") or options.get("path")
-        if not self.raw:
-            raise ValueError(
-                "idxml stream needs .load(path) or .option('paths', ...)"
-            )
-
-    def _discover(self) -> list[str]:
-        try:
-            return IdxmlDataSourceReader._expand(self.raw)
-        except ValueError:
-            return []
-
-    def initialOffset(self) -> dict:
-        return {"watermark": ""}
-
-    def latestOffset(self) -> dict:
-        files = sorted(self._discover())
-        return {"watermark": files[-1] if files else ""}
-
-    def partitions(self, start: dict, end: dict):
-        files = sorted(self._discover())
-        lo, hi = start["watermark"], end["watermark"]
-        return [IdxmlInputPartition(p) for p in files if lo < p <= hi]
-
-    def read(self, partition: IdxmlInputPartition):
-        reader = IdxmlDataSourceReader.__new__(IdxmlDataSourceReader)
-        reader.schema = self.schema
-        reader.paths = [partition.path]
-        parser = self.options.get("parser", "auto")
-        if parser == "auto":
-            parser = (
-                "pyopenms"
-                if HAVE_PYOPENMS
-                else ("xml" if Path(partition.path).exists() else "synthetic")
-            )
-        reader.parser = parser
-        reader.stems = None
-        reader.rt_min = None
-        reader.rt_max = None
-        yield from IdxmlDataSourceReader.read(reader, partition)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
-class IdxmlDataSource(DataSource):
+class IdxmlDataSource(RunFileDataSource):
     """Usage::
 
         spark.dataSource.register(IdxmlDataSource)
@@ -239,20 +41,9 @@ class IdxmlDataSource(DataSource):
         stream = spark.readStream.format("idxml").load(landing_dir)
     """
 
-    @classmethod
-    def name(cls) -> str:
-        return "idxml"
-
-    def schema(self) -> StructType:
-        return PSM_ID_SCHEMA
-
-    def reader(self, schema: StructType) -> IdxmlDataSourceReader:
-        return IdxmlDataSourceReader(schema, dict(self.options))
-
-    def streamReader(self, schema: StructType) -> IdxmlStreamReader:
-        return IdxmlStreamReader(schema, dict(self.options))
+    reader_class = IdxmlDataSourceReader
+    source_schema = PSM_ID_SCHEMA
 
 
 def register_idxml_source(spark) -> None:
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(IdxmlDataSource)
+    register_source(spark, IdxmlDataSource)

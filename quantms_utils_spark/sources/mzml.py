@@ -20,14 +20,16 @@ Parser backends:
   as-of windows, joins against PSMs of the same stem) is fully testable
   without any input files. Clearly marked; never silently substituted.
 
-``auto`` resolves to pyopenms when importable, else ``xml`` when the first
-path resolves to an existing file, else ``synthetic``.
+``auto`` resolves to pyopenms when importable, else ``xml``; a path that
+does not resolve to an mzML file raises ValueError on the driver
+(``sources/runfiles.py`` holds the resolution, stem and plumbing shared with
+the idXML reader and both DataSources).
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
+from functools import partial
 from pathlib import Path
 
 import numpy as np
@@ -41,6 +43,14 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+)
+
+from quantms_utils_spark.sources.runfiles import (  # noqa: F401 - HAVE_PYOPENMS re-exported
+    HAVE_PYOPENMS,
+    map_run_files,
+    resolve_parser,
+    run_stem,
+    stem_seed,
 )
 
 SPECTRUM_SCHEMA = StructType(
@@ -58,13 +68,6 @@ SPECTRUM_SCHEMA = StructType(
         StructField("acquisition_datetime", StringType(), True),
     ]
 )
-
-try:  # pragma: no cover - environment-dependent
-    import pyopenms  # noqa: F401
-
-    HAVE_PYOPENMS = True
-except Exception:  # pragma: no cover
-    HAVE_PYOPENMS = False
 
 VALID_SUFFIXES = (".mzml", ".mzml.gz")
 
@@ -89,15 +92,11 @@ def resolve_ms_path(path: str) -> str:
     return str(candidates[0])
 
 
-def _stem_seed(stem: str) -> int:
-    return int.from_bytes(hashlib.sha256(stem.encode()).digest()[:4], "big")
-
-
 def synthetic_spectra(stem: str, n_spectra: int = 200) -> pd.DataFrame:
     """Deterministic fake run: rt strictly increasing, MS1/MS2 interleaved
     (each MS2's precursor is drawn from the preceding MS1's peaks), peak
     arrays sorted ascending with values > 1.0."""
-    rng = np.random.RandomState(_stem_seed(stem))
+    rng = np.random.RandomState(stem_seed(stem))
     rows = []
     rt = 0.0
     last_ms1_peaks: tuple[np.ndarray, np.ndarray] | None = None
@@ -137,7 +136,7 @@ def _parse_pyopenms(path: str, ms_levels: Sequence[int] | None) -> pd.DataFrame:
         mzml.setOptions(opts)
     exp = MSExperiment()
     mzml.load(path, exp)
-    stem = Path(path).name.split(".")[0]
+    stem = run_stem(path)
     acq = exp.getDateTime().get() if exp.getDateTime() else None
     rows = []
     for i, spec in enumerate(exp):
@@ -169,6 +168,28 @@ def _scan_from_native_id(native_id: str, index: int) -> str:
     return m.group(1) if m else (native_id or str(index))
 
 
+def parse_mzml_file(
+    path: str,
+    parser: str,
+    ms_levels: Sequence[int] | None = None,
+    n_synthetic: int = 200,
+) -> pd.DataFrame:
+    """One run as a SPECTRUM_SCHEMA frame, restricted to ``ms_levels`` when
+    given; ``parser`` is a value returned by ``resolve_parser``. Shared by
+    ``read_spectra`` and ``format("mzml")``."""
+    if parser == "synthetic":
+        out = synthetic_spectra(run_stem(path), n_synthetic)
+    elif parser == "xml":
+        from quantms_utils_spark.sources.mzml_xml import parse_mzml_xml
+
+        out = parse_mzml_xml(resolve_ms_path(path), ms_levels)
+    else:  # pragma: no cover - needs pyopenms
+        out = _parse_pyopenms(resolve_ms_path(path), ms_levels)
+    if ms_levels is not None:
+        out = out[out["ms_level"].isin(ms_levels)]
+    return out
+
+
 def read_spectra(
     spark: SparkSession,
     paths: Sequence[str],
@@ -177,53 +198,10 @@ def read_spectra(
     synthetic_spectra_per_file: int = 200,
 ) -> DataFrame:
     """Spectra DataFrame over many runs; one partition per file."""
-    parser = resolve_parser(parser, paths)
-
-    levels = list(ms_levels) if ms_levels else None
-    if not paths:
-        raise ValueError(
-            "read_spectra: paths must be non-empty (an empty run list "
-            "is a caller bug; repartition(0) would raise a cryptic "
-            "engine error instead)"
-        )
-    paths_df = spark.createDataFrame(
-        [(p,) for p in paths], schema="path string"
-    ).repartition(len(paths), "path")
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                if parser == "pyopenms":  # pragma: no cover - needs pyopenms
-                    out = _parse_pyopenms(resolve_ms_path(path), levels)
-                elif parser == "xml":
-                    from quantms_utils_spark.sources.mzml_xml import parse_mzml_xml
-
-                    out = parse_mzml_xml(resolve_ms_path(path), levels)
-                else:
-                    stem = Path(path).name.split(".")[0]
-                    out = synthetic_spectra(stem, synthetic_spectra_per_file)
-                if levels:
-                    out = out[out["ms_level"].isin(levels)]
-                yield out
-
-    return paths_df.mapInPandas(parse, schema=SPECTRUM_SCHEMA)
-
-
-def resolve_parser(parser: str, paths: Sequence[str]) -> str:
-    """Resolve the ``auto`` backend choice; validate explicit choices."""
-    if parser == "auto":
-        if HAVE_PYOPENMS:  # pragma: no cover - needs pyopenms
-            return "pyopenms"
-        try:
-            resolve_ms_path(paths[0])
-            return "xml"
-        except (ValueError, IndexError):
-            return "synthetic"
-    if parser not in ("pyopenms", "xml", "synthetic"):
-        raise ValueError(f"unknown parser {parser!r}")
-    if parser == "pyopenms" and not HAVE_PYOPENMS:  # pragma: no cover
-        raise NotImplementedError(
-            "pyopenms is not importable in this environment; use parser='xml' "
-            "(pure-Python mzML parsing) or 'synthetic' (test generator)"
-        )
-    return parser
+    parse_file = partial(
+        parse_mzml_file,
+        parser=resolve_parser(parser, paths, resolve_ms_path),
+        ms_levels=list(ms_levels) if ms_levels else None,
+        n_synthetic=synthetic_spectra_per_file,
+    )
+    return map_run_files(spark, paths, parse_file, SPECTRUM_SCHEMA, "read_spectra")

@@ -8,213 +8,69 @@ source"): the reference's reader-option pushdown
 
     spark.read.format("mzml").load(path).filter("ms_level = 1")
 
-evaluates the ms-level restriction INSIDE the source (pyopenms skips the
-spectra at parse time) instead of materializing every spectrum and filtering
-after the fact. Retention-time range predicates push the same way.
+evaluates the ms-level restriction INSIDE the source (the parser skips the
+other spectra) instead of materializing every spectrum and filtering after
+the fact. Retention-time range predicates push the same way.
 
-Partitioning: one ``InputPartition`` per resolved file — the run/file is the
-unit of parallelism for a 100 TB corpus of runs, matching
-``sources/mzml.py:read_spectra``. Reads yield Arrow RecordBatches, never
-per-row Python tuples.
+Partitioning, rt pushdown, Arrow conversion and the high-water-mark stream
+reader (``spark.readStream.format("mzml")``) are the shared run-file core in
+``sources/runfiles.py``; the per-file parse is ``parse_mzml_file``, the same
+one ``sources/mzml.py:read_spectra`` runs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
-from pathlib import Path
+from functools import partial
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    InputPartition,
-    LessThan,
-    LessThanOrEqual,
-)
+import pandas as pd
+from pyspark.sql.datasource import EqualTo, Filter, In
 from pyspark.sql.types import StructType
 
 from quantms_utils_spark.sources.mzml import (
     SPECTRUM_SCHEMA,
-    _parse_pyopenms,
+    VALID_SUFFIXES,
+    parse_mzml_file,
     resolve_ms_path,
-    resolve_parser,
-    synthetic_spectra,
+)
+from quantms_utils_spark.sources.runfiles import (
+    RunFileDataSource,
+    RunFileReader,
+    RunFileStreamReader,
+    register_source,
 )
 
 
-class MzmlInputPartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+class MzmlDataSourceReader(RunFileReader):
+    """Adds the ms_level slot (EqualTo or In) to the shared rt-range pushdown."""
 
+    format_name = "mzml"
+    suffixes = VALID_SUFFIXES
+    rt_column = "rt"
+    locate = staticmethod(resolve_ms_path)
 
-class MzmlDataSourceReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict):
-        self.schema = schema
+    def __init__(self, schema: StructType, options: dict, expand: bool = True):
+        super().__init__(schema, options, expand)
         self.n_synthetic = int(options.get("synthetic_spectra_per_file", "200"))
-        raw = options.get("paths") or options.get("path")
-        if not raw:
-            raise ValueError("mzml source needs .load(path) or .option('paths', ...)")
-        self.paths = self._expand(raw)
-        self.parser = resolve_parser(options.get("parser", "auto"), self.paths)
-        # pushed-down predicate state
         self.ms_levels: list[int] | None = None
-        self.rt_min: tuple[float, bool] | None = None  # (bound, inclusive)
-        self.rt_max: tuple[float, bool] | None = None
 
-    @staticmethod
-    def _expand(raw: str) -> list[str]:
-        out: list[str] = []
-        for token in raw.split(","):
-            token = token.strip()
-            if not token:
-                continue
-            p = Path(token)
-            if p.is_dir():
-                # every suffix VALID_SUFFIXES accepts, including gzipped runs
-                for pattern in ("*.mzML", "*.mzml", "*.mzML.gz", "*.mzml.gz"):
-                    out.extend(sorted(str(c) for c in p.glob(pattern)))
-            elif any(ch in token for ch in "*?["):
-                out.extend(sorted(str(c) for c in p.parent.glob(p.name)))
-            else:
-                out.append(token)
-        if not out:
-            raise ValueError(f"mzml source resolved no files from {raw!r}")
-        return out
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """Claim ms_level equality/IN and rt range bounds; everything else is
-        returned to Spark to evaluate post-scan.
-
-        At most ONE filter per (column, bound-kind) slot is claimed — a
-        conjunction like ``rt > 5 AND rt >= 10`` must not collapse into a
-        single stored bound (the overwritten predicate would never be
-        evaluated anywhere). Subsequent filters on an occupied slot are
-        yielded back to Spark, which applies them post-scan.
-        """
-        for f in filters:
-            col = f.attribute[0] if getattr(f, "attribute", None) else None
-            if (
-                col == "ms_level"
-                and isinstance(f, EqualTo)
-                and self.ms_levels is None
-            ):
+    def claim(self, f: Filter) -> bool:
+        if getattr(f, "attribute", None) == ("ms_level",) and self.ms_levels is None:
+            if isinstance(f, EqualTo):
                 self.ms_levels = [int(f.value)]
-            elif (
-                col == "ms_level" and isinstance(f, In) and self.ms_levels is None
-            ):
+                return True
+            if isinstance(f, In):
                 self.ms_levels = sorted(int(v) for v in f.value)
-            elif (
-                col == "rt"
-                and isinstance(f, (GreaterThan, GreaterThanOrEqual))
-                and self.rt_min is None
-            ):
-                self.rt_min = (float(f.value), isinstance(f, GreaterThanOrEqual))
-            elif (
-                col == "rt"
-                and isinstance(f, (LessThan, LessThanOrEqual))
-                and self.rt_max is None
-            ):
-                self.rt_max = (float(f.value), isinstance(f, LessThanOrEqual))
-            else:
-                yield f
+                return True
+        return super().claim(f)
 
-    def partitions(self) -> Sequence[InputPartition]:
-        return [MzmlInputPartition(p) for p in self.paths]
-
-    def read(self, partition: MzmlInputPartition):
-        import pyarrow as pa
-
-        if self.parser == "pyopenms":  # pragma: no cover - needs pyopenms
-            pdf = _parse_pyopenms(resolve_ms_path(partition.path), self.ms_levels)
-        elif self.parser == "xml":
-            from quantms_utils_spark.sources.mzml_xml import parse_mzml_xml
-
-            pdf = parse_mzml_xml(resolve_ms_path(partition.path), self.ms_levels)
-        else:
-            stem = Path(partition.path).name.split(".")[0]
-            pdf = synthetic_spectra(stem, self.n_synthetic)
-        if self.ms_levels is not None:
-            pdf = pdf[pdf["ms_level"].isin(self.ms_levels)]
-        if self.rt_min is not None:
-            bound, incl = self.rt_min
-            pdf = pdf[pdf["rt"] >= bound] if incl else pdf[pdf["rt"] > bound]
-        if self.rt_max is not None:
-            bound, incl = self.rt_max
-            pdf = pdf[pdf["rt"] <= bound] if incl else pdf[pdf["rt"] < bound]
-        # Cast to the declared Spark schema's Arrow types — pandas inference
-        # widens int32 fields (ms_level, precursor_charge) to int64, which the
-        # JVM-side ArrowColumnVector accessors reject.
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(self.schema)
-        table = pa.Table.from_pandas(pdf, preserve_index=False).select(
-            target.names
-        ).cast(target)
-        yield from table.to_batches(max_chunksize=10_000)
+    def parse(self, path: str) -> pd.DataFrame:
+        return parse_mzml_file(path, self.parser, self.ms_levels, self.n_synthetic)
 
 
-class MzmlStreamReader(DataSourceStreamReader):
-    """Continuous ingestion of newly-landed runs: each micro-batch picks up
-    mzML files that appeared since the last committed offset.
-
-    Offsets are a lexicographic HIGH-WATER MARK over file names (the usual
-    object-store landing convention: files are immutable once landed, names
-    monotone per producer). A positional index into the re-sorted file list
-    would corrupt on a late file sorting before committed ones (re-read +
-    skip); with the watermark, such a file is deterministically IGNORED —
-    the documented contract, matching file-source semantics for out-of-order
-    landings. ``partitions(start, end)`` hands each new file to one task and
-    ``read`` reuses the batch partition-reader verbatim, so batch and
-    streaming ingest share one parse path (and one set of parser backends).
-    """
-
-    def __init__(self, schema: StructType, options: dict):
-        self.schema = schema
-        self.options = options
-        self.raw = options.get("paths") or options.get("path")
-        if not self.raw:
-            raise ValueError("mzml stream needs .load(path) or .option('paths', ...)")
-
-    def _discover(self) -> list[str]:
-        try:
-            return MzmlDataSourceReader._expand(self.raw)
-        except ValueError:
-            return []  # nothing landed yet
-
-    def initialOffset(self) -> dict:
-        return {"watermark": ""}
-
-    def latestOffset(self) -> dict:
-        files = sorted(self._discover())
-        return {"watermark": files[-1] if files else ""}
-
-    def partitions(self, start: dict, end: dict):
-        files = sorted(self._discover())
-        lo, hi = start["watermark"], end["watermark"]
-        return [MzmlInputPartition(p) for p in files if lo < p <= hi]
-
-    def read(self, partition: MzmlInputPartition):
-        reader = MzmlDataSourceReader.__new__(MzmlDataSourceReader)
-        reader.schema = self.schema
-        reader.parser = resolve_parser(
-            self.options.get("parser", "auto"), [partition.path]
-        )
-        reader.n_synthetic = int(self.options.get("synthetic_spectra_per_file", "200"))
-        reader.ms_levels = None
-        reader.rt_min = None
-        reader.rt_max = None
-        yield from MzmlDataSourceReader.read(reader, partition)
-
-    def commit(self, end: dict) -> None:
-        pass
+MzmlStreamReader = partial(RunFileStreamReader, MzmlDataSourceReader)
 
 
-class MzmlDataSource(DataSource):
+class MzmlDataSource(RunFileDataSource):
     """Usage::
 
         spark.dataSource.register(MzmlDataSource)
@@ -222,22 +78,9 @@ class MzmlDataSource(DataSource):
         stream = spark.readStream.format("mzml").load(landing_dir)
     """
 
-    @classmethod
-    def name(cls) -> str:
-        return "mzml"
-
-    def schema(self) -> StructType:
-        return SPECTRUM_SCHEMA
-
-    def reader(self, schema: StructType) -> MzmlDataSourceReader:
-        return MzmlDataSourceReader(schema, dict(self.options))
-
-    def streamReader(self, schema: StructType) -> MzmlStreamReader:
-        return MzmlStreamReader(schema, dict(self.options))
+    reader_class = MzmlDataSourceReader
+    source_schema = SPECTRUM_SCHEMA
 
 
 def register_mzml_source(spark) -> None:
-    # Runtime-settable; required for pushFilters to be honored on sessions not
-    # built by quantms_utils_spark.session.get_spark.
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(MzmlDataSource)
+    register_source(spark, MzmlDataSource)

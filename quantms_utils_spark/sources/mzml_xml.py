@@ -43,6 +43,8 @@ from xml.etree.ElementTree import iterparse
 import numpy as np
 import pandas as pd
 
+from quantms_utils_spark.sources.runfiles import run_stem
+
 # numpress scheme by accession: plain, and "followed by zlib" combos
 _NUMPRESS_ACCESSIONS = {
     "MS:1002312": ("linear", False),
@@ -133,7 +135,7 @@ def parse_mzml_xml(
     )
 
     wanted = set(int(v) for v in ms_levels) if ms_levels else None
-    stem = Path(path).name.split(".")[0]
+    stem = run_stem(path)
     opener = gzip.open if path.lower().endswith(".gz") else open
     rows = []
     acq: str | None = None

@@ -31,6 +31,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from quantms_utils_spark.sources.runfiles import expand_paths, register_source
 from quantms_utils_spark.sources.warc import (
     WARC_SCHEMA,
     _gunzip_members,
@@ -52,30 +53,11 @@ class WarcDataSourceReader(DataSourceReader):
             raise ValueError(
                 "warc source needs .load(path) or .option('paths', ...)"
             )
-        self.paths = self._expand(raw)
+        self.paths = expand_paths(raw, (".warc", ".warc.gz"), "warc")
         # pushed-down predicate state (single-slot each, like the mzml
         # reader: a second filter on an occupied slot goes back to Spark)
         self.http_status: int | None = None
         self.warc_type: str | None = None
-
-    @staticmethod
-    def _expand(raw: str) -> list[str]:
-        out: list[str] = []
-        for token in raw.split(","):
-            token = token.strip()
-            if not token:
-                continue
-            p = Path(token)
-            if p.is_dir():
-                for pattern in ("*.warc", "*.warc.gz"):
-                    out.extend(sorted(str(c) for c in p.glob(pattern)))
-            elif any(ch in token for ch in "*?["):
-                out.extend(sorted(str(c) for c in p.parent.glob(p.name)))
-            else:
-                out.append(token)
-        if not out:
-            raise ValueError(f"warc source resolved no files from {raw!r}")
-        return out
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         """Claim ``http_status = N`` and ``warc_type = '...'`` equality —
@@ -159,7 +141,6 @@ def register_warc_source(spark) -> None:
 
     Python-source filter pushdown is off by default and a reader that
     implements ``pushFilters`` FAILS outright under that default (Spark
-    raises DATA_SOURCE_PUSHDOWN_DISABLED rather than silently skipping),
-    so enable it here — same as the mzml source's registration."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(WarcDataSource)
+    raises DATA_SOURCE_PUSHDOWN_DISABLED rather than silently skipping);
+    ``register_source`` enables it, as for the mzml and idxml sources."""
+    register_source(spark, WarcDataSource)

@@ -1,6 +1,6 @@
 """Tests for the registrable `idxml` Python DataSource: per-file
 partitioning, parity with read_identifications, reference_file_name
-FILE-PRUNING pushdown, rt-range pushdown, and the streaming reader."""
+filters left to Spark, rt-range pushdown, and the streaming reader."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import EqualTo, GreaterThan, In
 
-from quantms_utils_spark.sources.idxml import read_identifications
+from quantms_utils_spark.sources.idxml import PSM_ID_SCHEMA, read_identifications
 from quantms_utils_spark.sources.idxml_datasource import (
     IdxmlDataSource,
     IdxmlDataSourceReader,
@@ -51,23 +51,29 @@ def test_synthetic_parity_and_partitioning(spark):
     assert stems == {"runA", "runB"}
 
 
-def test_reference_file_name_prunes_files():
-    reader = IdxmlDataSourceReader.__new__(IdxmlDataSourceReader)
-    reader.paths = ["a/runA.idXML", "b/runB.idXML", "c/runC.idXML"]
-    reader.stems = None
-    reader.rt_min = None
-    reader.rt_max = None
-    residual = list(reader.pushFilters([EqualTo(("reference_file_name",), "runB")]))
-    assert residual == []
-    parts = reader.partitions()
-    assert [p.path for p in parts] == ["b/runB.idXML"]
-    # IN prunes to the named set
-    reader.stems = None
-    list(reader.pushFilters([In(("reference_file_name",), ("runA", "runC"))]))
-    assert [p.path for p in reader.partitions()] == ["a/runA.idXML", "c/runC.idXML"]
-    # a second stem filter on the occupied slot is yielded back
-    left = list(reader.pushFilters([EqualTo(("reference_file_name",), "runA")]))
-    assert len(left) == 1
+def test_reference_file_name_filter_returned_to_spark():
+    """reference_file_name comes from the spectra_data entry inside the
+    file, not from the file name, so the source must not claim a filter
+    on it (it used to prune files by file-name stem)."""
+    reader = IdxmlDataSourceReader(
+        PSM_ID_SCHEMA, {"paths": "runA.idXML,runB.idXML", "parser": "synthetic"}
+    )
+    eq = EqualTo(("reference_file_name",), "runB")
+    isin = In(("reference_file_name",), ("runA", "runC"))
+    assert list(reader.pushFilters([eq, isin])) == [eq, isin]
+    assert [p.path for p in reader.partitions()] == ["runA.idXML", "runB.idXML"]
+
+
+def test_reference_file_name_filter_on_renamed_file(spark, tmp_path):
+    """A search-engine-suffixed file name (tiny_comet.idXML) holds run
+    'tiny': filtering on that run keeps its row, filtering on an absent
+    run returns no rows instead of failing the job."""
+    shutil.copy(FIXTURE, tmp_path / "tiny_comet.idXML")
+    df = spark.read.format("idxml").load(str(tmp_path))
+    assert [r["reference_file_name"] for r in df.collect()] == ["tiny"]
+    ref = F.col("reference_file_name")
+    assert df.filter(ref == "tiny").count() == 1
+    assert df.filter(ref == "absent").count() == 0
 
 
 def test_stem_filter_pushed_end_to_end(spark):
