@@ -103,7 +103,7 @@ def dianncfg_cmd(enzyme, fix_mod, var_mod, out_dir):
     "semantics, ms1_feature_finder.py); seed = diagnostic top-N stand-in.",
 )
 @click.option("--out_dir", default=".", type=click.Path())
-@click.option("--parser", default="auto", type=click.Choice(["auto", "pyopenms", "xml", "synthetic"]))
+@click.option("--parser", default="auto", type=click.Choice(["auto", "pyopenms", "xml"]))
 @click.option("--master", default=None)
 def mzmlstats_cmd(ms_path, ms2_file, feature_detection, feature_method, out_dir, parser, master):
     from quantms_utils_spark.pipelines.mzml_stats import write_tables
@@ -126,7 +126,7 @@ def mzmlstats_cmd(ms_path, ms2_file, feature_detection, feature_method, out_dir,
 @click.option("--ms2_file", default=None, type=click.Path())
 @click.option("--export_decoy_psm", is_flag=True, default=False)
 @click.option("--out_dir", default=".", type=click.Path())
-@click.option("--parser", default="auto", type=click.Choice(["auto", "pyopenms", "xml", "synthetic"]))
+@click.option("--parser", default="auto", type=click.Choice(["auto", "pyopenms", "xml"]))
 @click.option("--master", default=None)
 def psmconvert_cmd(idxml, ms2_file, export_decoy_psm, out_dir, parser, master):
     from quantms_utils_spark.pipelines.psm import convert_psms

@@ -39,32 +39,27 @@ def join_many_to_one(
     dim: DataFrame,
     on: Sequence[str] | str,
     how: str = "left",
-    *,
-    validate: bool = True,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
-    """``fact ⋈ dim`` where ``dim`` must be unique on the join keys.
+    """``fact ⋈ broadcast(dim)`` where ``dim`` must be unique on the join keys.
 
     Raises :class:`JoinValidationError` listing offending keys, mirroring
     pandas' ``validate="many_to_one"`` failure and the reference's explicit
     sample-uniqueness ValueError (diann2msstats.py:205-213).
     """
     keys = [on] if isinstance(on, str) else list(on)
-    if validate:
-        dups = (
-            dim.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(20)
-            .collect()
+    dups = (
+        dim.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > 1)
+        .limit(20)
+        .collect()
+    )
+    if dups:
+        bad = [tuple(r[k] for k in keys) for r in dups]
+        raise JoinValidationError(
+            f"many-to-one join violated: dimension side has duplicate keys {bad}"
         )
-        if dups:
-            bad = [tuple(r[k] for k in keys) for r in dups]
-            raise JoinValidationError(
-                f"many-to-one join violated: dimension side has duplicate keys {bad}"
-            )
-    dim_side = broadcast(dim) if broadcast_dim else dim
-    return fact.join(dim_side, keys, how)
+    return fact.join(broadcast(dim), keys, how)
 
 
 def unmatched_keys(

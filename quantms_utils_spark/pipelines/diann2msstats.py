@@ -7,8 +7,7 @@ a validated broadcast dimension. Plan shape:
     report scan (projected, Q.Value pushed down)
       → decoy / zero-intensity / label filters
       → sequence normalization expressions
-      ⟕ broadcast(design lookup)          [m:1-validated]
-      → unmatched-run diagnostic (left-anti) + drop
+      ⋈ broadcast(design lookup)          [m:1-validated, inner]
       → CSV sink (coalesce(1) — MSstats consumers expect a single file)
 
 The peptidoform normalization step (reference :75-83) calls pyopenms
@@ -17,6 +16,10 @@ when absent, the pure-Python Unimod normalizer
 (`functions/peptidoform.py`) reproduces the round-trip's visible rewrites
 (accession → canonical name, N-terminal dot notation) for standard
 accessions.
+
+The inner join drops the rows of runs the design does not name (and rows
+with a null key) inside the one scan of the report; the unmatched-run
+warning is a separate bounded job and does not feed the output plan.
 """
 
 from __future__ import annotations
@@ -27,23 +30,16 @@ from pathlib import Path
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType
-from pyspark.sql.functions import broadcast
 
 from quantms_utils_spark.functions import sanitize_sequence
 from quantms_utils_spark.sinks import write_single_csv
 from quantms_utils_spark.operators.joins import join_many_to_one, unmatched_keys
 from quantms_utils_spark.sources.design import read_experimental_design
 from quantms_utils_spark.sources.report import read_diann_report
+from quantms_utils_spark.sources.runfiles import HAVE_PYOPENMS
 from quantms_utils_spark.validation import SampleSheetError
 
 logger = logging.getLogger(__name__)
-
-try:  # pragma: no cover - environment-dependent
-    from pyopenms import AASequence  # noqa: F401
-
-    HAVE_PYOPENMS = True
-except Exception:  # pragma: no cover
-    HAVE_PYOPENMS = False
 
 RENAME = {
     "Protein.Names": "ProteinName",
@@ -154,7 +150,7 @@ def diann_to_msstats(
         .drop("Sample")
     )
 
-    joined = join_many_to_one(out, design_lookup, merge_keys, how="left")
+    joined = join_many_to_one(out, design_lookup, merge_keys, how="inner")
 
     unmatched = unmatched_keys(out, design_lookup, merge_keys)
     # Bounded diagnostic collect: a malformed design can mismatch every
@@ -170,10 +166,6 @@ def diann_to_msstats(
             n_bad,
             bad_runs,
         )
-        # Drop precisely the JOIN-MISS rows (anti-join on the keys) — a
-        # na.drop on BioReplicate would also discard matched rows whose
-        # design cell happens to be empty, with a misleading diagnostic.
-        joined = joined.join(broadcast(unmatched), merge_keys, "left_anti")
 
     if out_dir is not None:
         prefix = Path(design_path).stem

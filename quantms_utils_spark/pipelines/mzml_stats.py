@@ -237,7 +237,6 @@ def write_tables(
     feature_detection: bool = False,
     feature_method: str = "masstrace",
     feature_options: dict | None = None,
-    compression: str = "zstd",
     partition_by_run: bool = False,
 ) -> dict[str, str]:
     """Sink policy mirroring the reference's derived output naming (K5,
@@ -254,7 +253,7 @@ def write_tables(
         writer = df.write.mode("overwrite")
         if partition_by_run:
             writer = writer.partitionBy(RUN)
-        writer.parquet(target, compression=compression)
+        writer.parquet(target, compression="zstd")
 
     outputs: dict[str, str] = {}
     target = f"{out_dir}/{stem}_ms_info.parquet"

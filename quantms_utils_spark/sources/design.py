@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from quantms_utils_spark.functions import file_stem
-from quantms_utils_spark.validation import SampleSheetError
+from quantms_utils_spark.validation import SampleSheetError, require_unique_mapping
 
 UNIFIED_REQUIRED = ("Filename", "Fraction", "Sample", "Condition", "BioReplicate")
 
@@ -85,21 +85,15 @@ def _read_unified(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]
         f_cols = ["Filename", "Fraction", "Sample", "run"]
     f_table = df.select(*f_cols)
 
-    unique_mapping = df.select("Sample", "Condition", "BioReplicate").distinct()
-    dup = (
-        unique_mapping.groupBy("Sample")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .collect()
+    require_unique_mapping(
+        df, "Sample", ("Condition", "BioReplicate"), "experimental design"
     )
-    if dup:
-        bad = ", ".join(str(r["Sample"]) for r in dup)
-        raise SampleSheetError(
-            f"Inconsistent experimental design: Sample(s) {bad} map to multiple "
-            "(Condition, BioReplicate) combinations."
+    s_table = (
+        df.select("Sample", "Condition", "BioReplicate")
+        .distinct()
+        .withColumnsRenamed(
+            {"Condition": "MSstats_Condition", "BioReplicate": "MSstats_BioReplicate"}
         )
-    s_table = unique_mapping.withColumnsRenamed(
-        {"Condition": "MSstats_Condition", "BioReplicate": "MSstats_BioReplicate"}
     )
     return s_table, f_table
 

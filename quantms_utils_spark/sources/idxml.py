@@ -8,13 +8,10 @@ and Catalyst handles the flattening.
 
 Backends mirror sources/mzml.py: ``pyopenms`` (real IdXMLFile parsing,
 reference psm_conversion.py:87-93) gated behind import; ``xml`` (pure-Python
-parser of the public OpenMS idXML format — real file bytes, no C++);
-``synthetic`` generates deterministic identifications whose scan numbers
-reference the synthetic mzML spectra of the same stem (same seed
-derivation), so the PSM↔spectrum join (J4) is exercised end-to-end without
-any input files. ``auto`` = pyopenms when importable, else xml; a missing
-file raises ValueError on the driver. Resolution, stems and the per-file
-plumbing are shared with the mzML reader (``sources/runfiles.py``).
+parser of the public OpenMS idXML format — real file bytes, no C++).
+``auto`` = pyopenms when importable, else xml; a missing file raises
+ValueError on the driver. Resolution, stems and the per-file plumbing are
+shared with the mzML reader (``sources/runfiles.py``).
 """
 
 from __future__ import annotations
@@ -22,7 +19,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 from functools import partial
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -38,7 +34,6 @@ from quantms_utils_spark.sources.runfiles import (
     map_run_files,
     resolve_parser,
     run_stem,
-    stem_seed,
 )
 
 HIT_SCHEMA = StructType(
@@ -69,66 +64,6 @@ PSM_ID_SCHEMA = StructType(
     ]
 )
 
-_RESIDUES = "ACDEFGHIKLMNPQRSTVWY"
-
-
-def synthetic_identifications(stem: str, n_ids: int = 60) -> pd.DataFrame:
-    """Deterministic fake identifications aligned with
-    sources.mzml.synthetic_spectra(stem): MS2 scans are 1000+i for i % 4 != 0."""
-    rng = np.random.RandomState(stem_seed(stem) ^ 0x5A5A)
-    engines = ["Comet"] if rng.rand() < 0.5 else ["MS-GF+", "Comet"]
-    multi = len(engines) > 1
-    # ConsensusID runs usually carry a 'q-value' score type after FDR, but
-    # not always (reference psm_conversion.py:144-146 gates on it) — vary it
-    # deterministically so both branches of the gate are exercised.
-    if multi:
-        score_type = "q-value" if rng.rand() < 0.7 else "Posterior Error Probability"
-    else:
-        score_type = "expect" if engines == ["Comet"] else "SpecEValue"
-    rows = []
-    for _ in range(n_ids):
-        i = int(rng.randint(0, 200))
-        if i % 4 == 0:
-            i += 1  # land on an MS2 index
-        scan = 1000 + i
-        rt = float(rng.uniform(0, 400))
-        mz = float(rng.uniform(300, 1200))
-        hits = []
-        for rank in range(1, int(rng.randint(1, 4)) + 1):
-            seq = "".join(_RESIDUES[j] for j in rng.randint(0, 20, int(rng.randint(6, 15))))
-            if rng.rand() < 0.3:
-                pos = int(rng.randint(1, len(seq)))
-                seq = seq[:pos] + "(Oxidation)" + seq[pos:]
-            n_prot = int(rng.randint(1, 3))
-            starts = [int(rng.randint(0, 500)) for _ in range(n_prot)]
-            hits.append(
-                {
-                    "peptidoform": seq,
-                    "charge": int(rng.randint(1, 5)),
-                    "score": float(rng.uniform(0, 1)),
-                    "is_decoy": int(rng.rand() < 0.2),
-                    "hit_rank": rank,
-                    "consensus_support": float(rng.uniform(0, 1)) if multi else None,
-                    "qvalue_meta": float(rng.uniform(0, 0.05)) if rng.rand() < 0.5 else None,
-                    "posterior_error_probability": float(rng.uniform(0, 1)),
-                    "protein_accessions": [f"P{rng.randint(10000, 99999)}" for _ in range(n_prot)],
-                    "protein_start_positions": starts,
-                    "protein_end_positions": [s + 10 for s in starts],
-                }
-            )
-        rows.append(
-            (
-                stem,
-                f"controllerType=0 controllerNumber=1 scan={scan}",
-                rt,
-                mz,
-                engines,
-                score_type,
-                hits,
-            )
-        )
-    return pd.DataFrame(rows, columns=[f.name for f in PSM_ID_SCHEMA.fields])
-
 
 def read_identifications(
     spark: SparkSession,
@@ -146,8 +81,6 @@ def parse_idxml_file(path: str, parser: str) -> pd.DataFrame:
     """One idXML file as a PSM_ID_SCHEMA frame; ``parser`` is a value
     returned by ``resolve_parser``. Shared by ``read_identifications`` and
     ``format("idxml")``."""
-    if parser == "synthetic":
-        return synthetic_identifications(run_stem(path))
     if parser == "xml":
         return _parse_xml_idxml(path)
     return _parse_pyopenms_idxml(path)  # pragma: no cover - needs pyopenms

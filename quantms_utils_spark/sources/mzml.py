@@ -15,19 +15,20 @@ Parser backends:
 - ``xml``: pure-Python streaming parser of the public HUPO-PSI mzML XML
   format (sources/mzml_xml.py) — parses REAL file bytes (base64 + zlib peak
   arrays) with no C++ dependency. MS-level pushdown skips binary decode.
-- ``synthetic``: a deterministic generator seeded by the file stem — NOT a
-  parser. It exists so the distributed plumbing (partitioning, ordering,
-  as-of windows, joins against PSMs of the same stem) is fully testable
-  without any input files. Clearly marked; never silently substituted.
 
 ``auto`` resolves to pyopenms when importable, else ``xml``; a path that
 does not resolve to an mzML file raises ValueError on the driver
 (``sources/runfiles.py`` holds the resolution, stem and plumbing shared with
 the idXML reader and both DataSources).
+
+``synthetic_spectra`` is not a backend: it generates a deterministic run
+that ``sources/mzml_xml.py:write_mzml`` writes to disk, so tests and the
+benchmark parse real files.
 """
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Sequence
 from functools import partial
 from pathlib import Path
@@ -50,7 +51,6 @@ from quantms_utils_spark.sources.runfiles import (  # noqa: F401 - HAVE_PYOPENMS
     map_run_files,
     resolve_parser,
     run_stem,
-    stem_seed,
 )
 
 SPECTRUM_SCHEMA = StructType(
@@ -93,10 +93,12 @@ def resolve_ms_path(path: str) -> str:
 
 
 def synthetic_spectra(stem: str, n_spectra: int = 200) -> pd.DataFrame:
-    """Deterministic fake run: rt strictly increasing, MS1/MS2 interleaved
-    (each MS2's precursor is drawn from the preceding MS1's peaks), peak
-    arrays sorted ascending with values > 1.0."""
-    rng = np.random.RandomState(stem_seed(stem))
+    """Deterministic run seeded by ``stem``, in SPECTRUM_SCHEMA shape, for
+    ``write_mzml`` to put on disk: rt strictly increasing, MS1/MS2
+    interleaved (each MS2's precursor is drawn from the preceding MS1's
+    peaks), peak arrays sorted ascending with values > 1.0."""
+    seed = int.from_bytes(hashlib.sha256(stem.encode()).digest()[:4], "big")
+    rng = np.random.RandomState(seed)
     rows = []
     rt = 0.0
     last_ms1_peaks: tuple[np.ndarray, np.ndarray] | None = None
@@ -169,17 +171,12 @@ def _scan_from_native_id(native_id: str, index: int) -> str:
 
 
 def parse_mzml_file(
-    path: str,
-    parser: str,
-    ms_levels: Sequence[int] | None = None,
-    n_synthetic: int = 200,
+    path: str, parser: str, ms_levels: Sequence[int] | None = None
 ) -> pd.DataFrame:
     """One run as a SPECTRUM_SCHEMA frame, restricted to ``ms_levels`` when
     given; ``parser`` is a value returned by ``resolve_parser``. Shared by
     ``read_spectra`` and ``format("mzml")``."""
-    if parser == "synthetic":
-        out = synthetic_spectra(run_stem(path), n_synthetic)
-    elif parser == "xml":
+    if parser == "xml":
         from quantms_utils_spark.sources.mzml_xml import parse_mzml_xml
 
         out = parse_mzml_xml(resolve_ms_path(path), ms_levels)
@@ -195,13 +192,11 @@ def read_spectra(
     paths: Sequence[str],
     ms_levels: Sequence[int] | None = None,
     parser: str = "auto",
-    synthetic_spectra_per_file: int = 200,
 ) -> DataFrame:
     """Spectra DataFrame over many runs; one partition per file."""
     parse_file = partial(
         parse_mzml_file,
         parser=resolve_parser(parser, paths, resolve_ms_path),
         ms_levels=list(ms_levels) if ms_levels else None,
-        n_synthetic=synthetic_spectra_per_file,
     )
     return map_run_files(spark, paths, parse_file, SPECTRUM_SCHEMA, "read_spectra")

@@ -50,7 +50,6 @@ class MzmlDataSourceReader(RunFileReader):
 
     def __init__(self, schema: StructType, options: dict, expand: bool = True):
         super().__init__(schema, options, expand)
-        self.n_synthetic = int(options.get("synthetic_spectra_per_file", "200"))
         self.ms_levels: list[int] | None = None
 
     def claim(self, f: Filter) -> bool:
@@ -64,7 +63,7 @@ class MzmlDataSourceReader(RunFileReader):
         return super().claim(f)
 
     def parse(self, path: str) -> pd.DataFrame:
-        return parse_mzml_file(path, self.parser, self.ms_levels, self.n_synthetic)
+        return parse_mzml_file(path, self.parser, self.ms_levels)
 
 
 MzmlStreamReader = partial(RunFileStreamReader, MzmlDataSourceReader)
@@ -74,7 +73,7 @@ class MzmlDataSource(RunFileDataSource):
     """Usage::
 
         spark.dataSource.register(MzmlDataSource)
-        df = spark.read.format("mzml").option("parser", "synthetic").load(path)
+        df = spark.read.format("mzml").option("parser", "xml").load(path)
         stream = spark.readStream.format("mzml").load(landing_dir)
     """
 

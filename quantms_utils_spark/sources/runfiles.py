@@ -4,7 +4,8 @@ One input file is one run and one unit of parallelism. Every run-file
 reader goes through this module, so each policy below exists once:
 
 - ``run_stem``: the run name the PSM↔spectrum join keys on;
-- ``resolve_parser``: the backend choice (``auto`` never fabricates data);
+- ``resolve_parser``: the backend choice and the check that every path is
+  a readable file;
 - ``expand_paths``: comma lists, directories and globs to a file list;
 - ``map_run_files``: the ``mapInPandas`` one-file-per-partition plumbing
   behind ``read_spectra`` / ``read_identifications``;
@@ -16,7 +17,6 @@ reader goes through this module, so each policy below exists once:
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable, Iterator, Sequence
 from pathlib import Path
 
@@ -42,7 +42,7 @@ try:  # pragma: no cover - environment-dependent
 except Exception:  # pragma: no cover
     HAVE_PYOPENMS = False
 
-PARSERS = ("pyopenms", "xml", "synthetic")
+PARSERS = ("pyopenms", "xml")
 
 
 def run_stem(path: str) -> str:
@@ -51,11 +51,6 @@ def run_stem(path: str) -> str:
     directory and strip one extension only, and the spectrum and PSM sides
     would then join on different keys."""
     return Path(path).name.split(".")[0]
-
-
-def stem_seed(stem: str) -> int:
-    """Deterministic seed of the synthetic generators for one run."""
-    return int.from_bytes(hashlib.sha256(stem.encode()).digest()[:4], "big")
 
 
 def require_file(path: str) -> str:
@@ -67,12 +62,11 @@ def require_file(path: str) -> str:
 def resolve_parser(
     parser: str, paths: Sequence[str], locate: Callable[[str], str] = require_file
 ) -> str:
-    """Validate a backend choice and, for the real parsers, every path.
+    """Validate a backend choice and every path.
 
     ``auto`` is pyopenms when importable, else the pure-Python ``xml``
-    parser; ``synthetic`` is a test generator and is used only when named.
-    ``locate`` raises ValueError for a path the format cannot read, so a
-    mistyped path fails here, on the driver."""
+    parser. ``locate`` raises ValueError for a path the format cannot read,
+    so a mistyped path fails here, on the driver."""
     if parser == "auto":
         parser = "pyopenms" if HAVE_PYOPENMS else "xml"
     if parser not in PARSERS:
@@ -80,11 +74,10 @@ def resolve_parser(
     if parser == "pyopenms" and not HAVE_PYOPENMS:  # pragma: no cover
         raise NotImplementedError(
             "pyopenms is not importable in this environment; use parser='xml' "
-            "(pure-Python parsing) or 'synthetic' (test generator)"
+            "(pure-Python parsing)"
         )
-    if parser != "synthetic":
-        for p in paths:
-            locate(p)
+    for p in paths:
+        locate(p)
     return parser
 
 

@@ -1,7 +1,7 @@
 """Expectations layer: the reference's validation semantics (SURVEY §2.11) as
 reusable helpers. Distributed jobs must fail fast on the driver with the same
-messages the reference raises/exits with — checks here run on schemas (free)
-or via bounded actions (limit-1 counts), never full scans.
+messages the reference raises/exits with — checks here collect a bounded
+list of offenders, never an unbounded key set.
 """
 
 from __future__ import annotations
@@ -13,25 +13,6 @@ from pyspark.sql import DataFrame
 
 class SampleSheetError(ValueError):
     """Sample sheet / design validation failure (reference exits 1)."""
-
-
-def require_columns(
-    columns: Sequence[str], required: Sequence[str], context: str
-) -> list[str]:
-    """Case-insensitive required-column presence check
-    (reference sdrf/check_samplesheet.py:64-99). Returns error strings."""
-    lower = {c.lower() for c in columns}
-    return [
-        f"{context} is missing required column: '{r}'"
-        for r in required
-        if r.lower() not in lower
-    ]
-
-
-def require_nonempty(df: DataFrame, context: str) -> None:
-    """Header-but-no-rows check (check_samplesheet.py:75-78)."""
-    if df.limit(1).count() == 0:
-        raise SampleSheetError(f"{context} contains a header but no data rows")
 
 
 def require_unique_mapping(

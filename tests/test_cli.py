@@ -78,14 +78,28 @@ def test_openms2sample_end_to_end(spark, tmp_path):
     assert "rows=" in result.output
 
 
-def test_mzmlstats_end_to_end(spark, tmp_path):
+def test_mzmlstats_end_to_end(spark, tmp_path, run_files):
     result = CliRunner().invoke(
         cli,
-        ["mzmlstats", "--ms_path", "runA.mzML", "--parser", "synthetic",
+        ["mzmlstats", "--ms_path", run_files.mzml("runA"), "--parser", "xml",
          "--out_dir", str(tmp_path), "--master", "local[2]"],
     )
     assert result.exit_code == 0, result.output
     assert (tmp_path / "runA_ms_info.parquet").exists()
+
+
+@pytest.mark.parametrize("command,path_option", [("mzmlstats", "--ms_path"),
+                                                  ("psmconvert", "--idxml")])
+def test_parser_synthetic_is_a_usage_error(tmp_path, command, path_option):
+    """The readers only parse files: no parser choice generates data."""
+    result = CliRunner().invoke(
+        cli,
+        [command, path_option, "runA", "--parser", "synthetic",
+         "--out_dir", str(tmp_path)],
+    )
+    assert result.exit_code == 2
+    assert "Invalid value for '--parser'" in result.output
+    assert not list(tmp_path.iterdir())
 
 
 def test_curate_and_webingest_end_to_end(spark, tmp_path):

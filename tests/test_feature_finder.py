@@ -113,12 +113,12 @@ class TestIsotopeFeatures:
         assert all(0.0 <= p <= 1.0 for p in ptics)
         assert ptics == sorted(ptics)
 
-    def test_runs_on_synthetic_backend(self, spark):
-        """End-to-end over the synthetic generator: must produce features
-        with valid invariants (no crash, sane bounds)."""
+    def test_runs_on_generated_run(self, spark, run_files):
+        """End-to-end over a generated run written to mzML and parsed back:
+        must produce features with valid invariants (no crash, sane bounds)."""
         from quantms_utils_spark.sources.mzml import read_spectra
 
-        spectra = read_spectra(spark, ["ffrunA.mzML"], parser="synthetic")
+        spectra = read_spectra(spark, [run_files.mzml("ffrunA")], parser="xml")
         feats = detect_features_masstrace(
             spectra, mz_tol=0.5, min_scans=2, min_intensity=0.0
         )

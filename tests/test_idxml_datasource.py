@@ -26,6 +26,12 @@ def _register(spark):
     register_idxml_source(spark)
 
 
+@pytest.fixture(scope="module")
+def runs(run_files):
+    """Paths of two written idXML runs, runA and runB."""
+    return [run_files.idxml(stem) for stem in ("runA", "runB")]
+
+
 def test_matches_read_identifications_xml(spark):
     via_source = (
         spark.read.format("idxml").load(str(FIXTURE)).orderBy("spectrum_reference")
@@ -39,11 +45,11 @@ def test_matches_read_identifications_xml(spark):
     ]
 
 
-def test_synthetic_parity_and_partitioning(spark):
+def test_two_files_two_partitions(spark, runs):
     df = (
         spark.read.format("idxml")
-        .option("parser", "synthetic")
-        .option("paths", "runA.idXML,runB.idXML")
+        .option("parser", "xml")
+        .option("paths", ",".join(runs))
         .load()
     )
     assert df.rdd.getNumPartitions() == 2
@@ -51,17 +57,17 @@ def test_synthetic_parity_and_partitioning(spark):
     assert stems == {"runA", "runB"}
 
 
-def test_reference_file_name_filter_returned_to_spark():
+def test_reference_file_name_filter_returned_to_spark(runs):
     """reference_file_name comes from the spectra_data entry inside the
     file, not from the file name, so the source must not claim a filter
     on it (it used to prune files by file-name stem)."""
     reader = IdxmlDataSourceReader(
-        PSM_ID_SCHEMA, {"paths": "runA.idXML,runB.idXML", "parser": "synthetic"}
+        PSM_ID_SCHEMA, {"paths": ",".join(runs), "parser": "xml"}
     )
     eq = EqualTo(("reference_file_name",), "runB")
     isin = In(("reference_file_name",), ("runA", "runC"))
     assert list(reader.pushFilters([eq, isin])) == [eq, isin]
-    assert [p.path for p in reader.partitions()] == ["runA.idXML", "runB.idXML"]
+    assert [p.path for p in reader.partitions()] == runs
 
 
 def test_reference_file_name_filter_on_renamed_file(spark, tmp_path):
@@ -76,11 +82,11 @@ def test_reference_file_name_filter_on_renamed_file(spark, tmp_path):
     assert df.filter(ref == "absent").count() == 0
 
 
-def test_stem_filter_pushed_end_to_end(spark):
+def test_stem_filter_pushed_end_to_end(spark, runs):
     df = (
         spark.read.format("idxml")
-        .option("parser", "synthetic")
-        .option("paths", "runA.idXML,runB.idXML")
+        .option("parser", "xml")
+        .option("paths", ",".join(runs))
         .load()
         .filter(F.col("reference_file_name") == "runB")
     )
@@ -88,7 +94,7 @@ def test_stem_filter_pushed_end_to_end(spark):
     assert rows and all(r["reference_file_name"] == "runB" for r in rows)
 
 
-def test_rt_filter_contract_and_end_to_end(spark):
+def test_rt_filter_contract_and_end_to_end(spark, runs):
     reader = IdxmlDataSourceReader.__new__(IdxmlDataSourceReader)
     reader.paths = ["runA.idXML"]
     reader.stems = None
@@ -99,8 +105,8 @@ def test_rt_filter_contract_and_end_to_end(spark):
 
     df = (
         spark.read.format("idxml")
-        .option("parser", "synthetic")
-        .option("paths", "runA.idXML")
+        .option("parser", "xml")
+        .option("paths", runs[0])
         .load()
     )
     hi = df.filter(F.col("retention_time") > 100.0)

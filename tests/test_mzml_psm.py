@@ -1,8 +1,11 @@
-"""mzmlstats + psmconvert pipeline tests over the synthetic parser backend.
+"""mzmlstats + psmconvert pipeline tests over generated runs.
 
-The synthetic backend is deterministic per file stem, so assertions here
-verify real distributed semantics: per-run ordering, as-of precursor lookup,
-peak statistics, range-join feature scans, and the PSM↔spectrum join."""
+Each run is ``synthetic_spectra(stem)`` written to mzML, with paired
+identifications of its MS2 scans written to idXML (the ``run_files``
+fixture), and is read back with the ``xml`` parser. The runs are
+deterministic per stem, so assertions here verify real distributed
+semantics: per-run ordering, as-of precursor lookup, peak statistics,
+range-join feature scans, and the PSM↔spectrum join."""
 
 from __future__ import annotations
 
@@ -19,12 +22,17 @@ from quantms_utils_spark.pipelines.psm import PSM_COLUMNS, convert_psms
 from quantms_utils_spark.sources.idxml import read_identifications
 from quantms_utils_spark.sources.mzml import read_spectra, resolve_ms_path
 
-RUNS = ["runA.mzML", "runB.mzML"]
+STEMS = ("runA", "runB")
 
 
 @pytest.fixture(scope="module")
-def spectra(spark):
-    return read_spectra(spark, RUNS, parser="synthetic").cache()
+def runs(run_files):
+    return [run_files.mzml(stem) for stem in STEMS]
+
+
+@pytest.fixture(scope="module")
+def spectra(spark, runs):
+    return read_spectra(spark, runs, parser="xml").cache()
 
 
 class TestMzmlIngest:
@@ -32,8 +40,8 @@ class TestMzmlIngest:
         assert spectra.count() == 400
         assert spectra.select("reference_file_name").distinct().count() == 2
 
-    def test_ms_level_pushdown(self, spark):
-        ms1_only = read_spectra(spark, RUNS, ms_levels=[1], parser="synthetic")
+    def test_ms_level_pushdown(self, spark, runs):
+        ms1_only = read_spectra(spark, runs, ms_levels=[1], parser="xml")
         levels = [r["ms_level"] for r in ms1_only.select("ms_level").distinct().collect()]
         assert levels == [1]
 
@@ -155,8 +163,8 @@ class TestMs2InfoAndSinks:
         }
 
     def test_write_tables(self, spectra, tmp_path):
-        # masstrace is the default (reference semantics). The synthetic
-        # fixture's peaks wander and never form traces, so implant a
+        # masstrace is the default (reference semantics). The generated
+        # runs' peaks wander and never form traces, so implant a
         # 4-scan trace run to give the real finder something to find.
         from quantms_utils_spark.sources.mzml import SPECTRUM_SCHEMA
 
@@ -236,30 +244,32 @@ class TestFeatures:
 
 
 class TestPsmConvert:
-    def test_end_to_end_with_join(self, spark, spectra):
-        ids = read_identifications(spark, ["runA.idXML", "runB.idXML"], parser="synthetic")
+    def test_end_to_end_with_join(self, spark, spectra, run_files):
+        ids = read_identifications(
+            spark, [run_files.idxml(stem) for stem in STEMS], parser="xml"
+        )
         ms2 = compute_ms2_info(spectra)
         psms = convert_psms(ids, ms2)
         assert psms.columns == PSM_COLUMNS
         rows = psms.collect()
         assert len(rows) > 50
-        # every PSM scan must have found its spectrum (synthetic ids reference
-        # real synthetic MS2 scans of the same stem)
+        # every PSM scan must have found its spectrum (the identifications
+        # name MS2 scans of the run with the same stem)
         assert all(r["num_peaks"] is not None and r["num_peaks"] > 0 for r in rows)
         assert all(r["is_decoy"] == 0 for r in rows)
 
-    def test_decoy_export(self, spark, spectra):
-        ids = read_identifications(spark, ["runA.idXML"], parser="synthetic")
+    def test_decoy_export(self, spark, spectra, run_files):
+        ids = read_identifications(spark, [run_files.idxml("runA")], parser="xml")
         ms2 = compute_ms2_info(spectra)
         with_decoys = convert_psms(ids, ms2, export_decoy_psm=True)
         assert with_decoys.filter(F.col("is_decoy") == 1).count() > 0
 
-    def test_global_qvalue_gated_on_score_type(self, spark):
+    def test_global_qvalue_gated_on_score_type(self, spark, run_files):
         """hit.score stands in for global_qvalue ONLY when the run is
         multi-engine AND the peptide id score type contains 'q-value'
         (reference psm_conversion.py:144-146); meta q-values always win."""
         ids = read_identifications(
-            spark, ["runA.idXML", "runB.idXML"], parser="synthetic"
+            spark, [run_files.idxml(stem) for stem in STEMS], parser="xml"
         )
         # force a multi-engine shape so the gate is what decides
         ids = ids.withColumn("search_engines", F.array(F.lit("MS-GF+"), F.lit("Comet")))
@@ -278,8 +288,8 @@ class TestPsmConvert:
         # but meta q-values still populate regardless of the gate
         assert ungated.filter(F.col("global_qvalue").isNotNull()).count() > 0
 
-    def test_modifications_parsed(self, spark):
-        ids = read_identifications(spark, ["runA.idXML"], parser="synthetic")
+    def test_modifications_parsed(self, spark, run_files):
+        ids = read_identifications(spark, [run_files.idxml("runA")], parser="xml")
         psms = convert_psms(ids, None)
         modded = psms.filter(F.col("modifications").isNotNull()).collect()
         assert len(modded) > 0

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -102,8 +103,6 @@ class TestGoldenMzml:
 
 
 def pd_isna(v):
-    import pandas as pd
-
     return pd.isna(v)
 
 
@@ -137,25 +136,19 @@ class TestRoundTrip:
 
 
 class TestSparkXmlBackend:
+    STEMS = ("xrunA", "xrunB")
+
     @pytest.fixture(scope="class")
-    def runs(self, spark, tmp_path_factory):
-        d = tmp_path_factory.mktemp("runs")
-        paths = []
-        for stem in ("xrunA", "xrunB"):
-            p = str(d / f"{stem}.mzML")
-            write_mzml(p, synthetic_spectra(stem, 60), dtype="f8",
-                       start_time_stamp="2024-01-01T00:00:00")
-            paths.append(p)
-        return paths
+    def runs(self, run_files):
+        return [run_files.mzml(stem, 60) for stem in self.STEMS]
 
     def test_read_spectra_xml_matches_synthetic(self, spark, runs):
         """The XML backend over files WRITTEN from the synthetic frames must
-        produce the same table the synthetic backend generates directly."""
+        produce the frames ``synthetic_spectra`` generates."""
         via_xml = read_spectra(spark, runs, parser="xml").toPandas()
-        direct = read_spectra(
-            spark, [Path(p).name for p in runs], parser="synthetic",
-            synthetic_spectra_per_file=60,
-        ).toPandas()
+        direct = pd.concat(
+            [synthetic_spectra(stem, 60) for stem in self.STEMS], ignore_index=True
+        )
         key = ["reference_file_name", "spectrum_index"]
         via_xml = via_xml.sort_values(key).reset_index(drop=True)
         direct = direct.sort_values(key).reset_index(drop=True)
@@ -168,7 +161,7 @@ class TestSparkXmlBackend:
 
     def test_auto_prefers_xml_for_real_files(self, spark, runs):
         df = read_spectra(spark, runs, parser="auto")
-        assert df.count() == 120  # parsed the real files (synthetic would be 200/file)
+        assert df.count() == 120  # parsed the two 60-spectrum files
 
     def test_datasource_parity(self, spark, runs):
         """format('mzml') with the xml backend returns the same rows as the
@@ -236,6 +229,16 @@ class TestGoldenIdxml:
         assert h2["is_decoy"] == 1
         assert h2["hit_rank"] == 2
         assert h2["qvalue_meta"] == pytest.approx(0.2)  # MS:1001491
+
+    def test_written_identifications_parse_back(self, run_files):
+        """The tests' idXML writer round-trips through the parser, for a
+        ConsensusID run (runA) and a single-engine run (runB), so the PSM
+        tests over written files exercise the frames they were built from."""
+        for stem, engines in (("runA", ["MS-GF+", "Comet"]), ("runB", ["Comet"])):
+            ids = run_files.identifications(stem)
+            got = _parse_xml_idxml(run_files.idxml(stem))
+            assert list(ids["search_engines"].iloc[0]) == engines
+            assert got.to_dict("records") == ids.to_dict("records")
 
     def test_no_protein_ids_error(self, tmp_path):
         content = "<IdXML><IdentificationRun search_engine=\"Comet\"/></IdXML>"

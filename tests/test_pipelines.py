@@ -104,6 +104,18 @@ class TestDiann2MSstats:
         assert out.count() == 3
         assert {r["Run"] for r in out.collect()} == {"run_A", "run_B"}
 
+    def test_report_scanned_once(self, spark, tmp_path):
+        """The returned frame reads the report once: rows of the unmatched
+        run (run_MISSING) drop in the design join, not through a second,
+        anti-joined scan of the report."""
+        from quantms_utils_spark.plans import physical_plan
+
+        report = _write(tmp_path, "report.tsv", REPORT_TSV)
+        design = _write(tmp_path, "design.tsv", LEGACY_DESIGN)
+        out = diann_to_msstats(spark, report, design)
+        assert physical_plan(out).count("FileScan csv") == 1
+        assert "run_MISSING" not in {r["Run"] for r in out.collect()}
+
     def test_unified_missing_columns(self, spark, tmp_path):
         design = _write(
             tmp_path, "bad.tsv", "Filename\tCondition\tBioReplicate\nx\ty\t1\n"

@@ -1,7 +1,7 @@
 """The shared run-file core (`sources/runfiles.py`): every mzML/idXML entry
-point rejects an unknown parser name and, under the default ``auto``, a
-missing file — instead of substituting synthetic data — and the run-stem
-rule is defined in one place only."""
+point rejects an unknown parser name — ``synthetic`` included: no backend
+generates data — and, under the default ``auto``, a missing file; and the
+run-stem rule is defined in one place only."""
 
 from __future__ import annotations
 
@@ -50,7 +50,7 @@ def _run(spark, fmt, entry, path, parser, tmp_path):
         q.stop()
 
 
-@pytest.mark.parametrize("case", ["unknown_parser", "missing_file_auto"])
+@pytest.mark.parametrize("case", ["unknown_parser", "synthetic_parser", "missing_file_auto"])
 @pytest.mark.parametrize("entry", ["helper", "datasource", "stream"])
 @pytest.mark.parametrize("fmt", sorted(FORMATS))
 def test_entry_points_reject_bad_parser_and_missing_file(spark, tmp_path, fmt, entry, case):
@@ -58,8 +58,9 @@ def test_entry_points_reject_bad_parser_and_missing_file(spark, tmp_path, fmt, e
     landing = tmp_path / "landing"
     landing.mkdir()
     shutil.copy(FIXTURES / fixture, landing / fixture)
-    if case == "unknown_parser":
-        parser, match = "xlm", "unknown parser"
+    if case in ("unknown_parser", "synthetic_parser"):
+        parser = "xlm" if case == "unknown_parser" else "synthetic"
+        match = "unknown parser"
         path = landing if entry == "stream" else landing / fixture
     else:
         parser, match = "auto", "typo"
