@@ -237,7 +237,7 @@ def merge_upsert(
 
     Source must be key-unique (the SQL MERGE precondition — two source
     rows hitting one target row is nondeterministic); enforced cheaply at
-    plan level by the caller or via `validation.require_unique_mapping`.
+    plan level by the caller.
 
     NULL key semantics follow SQL MERGE (``ON t.k = s.k``): NULL never
     matches, so a NULL-key source row always INSERTS and a NULL-key

@@ -7,9 +7,12 @@ Reference behaviors re-expressed (citations into /root/reference):
   (quantmsutils/diann/diann2msstats.py:117) plus the manual uniqueness check
   (:205-213). The dimension side is broadcast — in this domain it is always a
   design/config table of at most thousands of rows, so the fact side never
-  shuffles.
+  shuffles. The broadcast brings the dimension to the driver anyway, so its
+  keys are checked there from one collect; against a local relation (a
+  driver-built design lookup) the check starts no Spark job.
 - ``unmatched_keys`` — the warn-then-drop diagnostic for report runs missing
-  from the design (diann2msstats.py:119-127), expressed as a left-anti join.
+  from the design (diann2msstats.py:119-127), expressed as a left-anti join
+  of the fact keys against the broadcast dimension keys, then distinct.
 - ``range_join_binned`` — the feature↔scan interval containment join
   (quantmsutils/mzml/ms1_feature_finder.py:186-187,307-322 is an
   O(features×scans) python loop). OSS Spark has no range-join optimization, so
@@ -24,6 +27,7 @@ Reference behaviors re-expressed (citations into /root/reference):
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -47,15 +51,9 @@ def join_many_to_one(
     sample-uniqueness ValueError (diann2msstats.py:205-213).
     """
     keys = [on] if isinstance(on, str) else list(on)
-    dups = (
-        dim.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(20)
-        .collect()
-    )
-    if dups:
-        bad = [tuple(r[k] for k in keys) for r in dups]
+    counts = Counter(tuple(r) for r in dim.select(*keys).collect())
+    bad = [k for k, n in counts.items() if n > 1][:20]
+    if bad:
         raise JoinValidationError(
             f"many-to-one join violated: dimension side has duplicate keys {bad}"
         )
@@ -65,10 +63,11 @@ def join_many_to_one(
 def unmatched_keys(
     fact: DataFrame, dim: DataFrame, on: Sequence[str] | str
 ) -> DataFrame:
-    """Distinct fact keys with no dimension match (left-anti), for the
-    warn-and-drop diagnostic of diann2msstats.py:119-127."""
+    """Distinct fact keys with no dimension match (left-anti against the
+    broadcast dimension keys), for the warn-and-drop diagnostic of
+    diann2msstats.py:119-127."""
     keys = [on] if isinstance(on, str) else list(on)
-    return fact.select(*keys).distinct().join(dim.select(*keys).distinct(), keys, "left_anti")
+    return fact.select(*keys).join(broadcast(dim.select(*keys)), keys, "left_anti").distinct()
 
 
 def asof_join(

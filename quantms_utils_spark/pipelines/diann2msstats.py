@@ -2,7 +2,10 @@
 
 Spark-first reimplementation of quantmsutils/diann/diann2msstats.py:24-130 —
 a star join: the billion-row report is the fact side; the kilobyte design is
-a validated broadcast dimension. Plan shape:
+a validated broadcast dimension. The design is parsed, validated and merged
+into its (Run[, label]) → (Condition, BioReplicate, ...) lookup in pandas on
+the driver (`sources/design.py:parse_design`), and enters Spark once, as the
+local relation the report joins. Plan shape:
 
     report scan (projected, Q.Value pushed down)
       → decoy / zero-intensity / label filters
@@ -34,7 +37,7 @@ from pyspark.sql.types import StringType
 from quantms_utils_spark.functions import sanitize_sequence
 from quantms_utils_spark.sinks import write_single_csv
 from quantms_utils_spark.operators.joins import join_many_to_one, unmatched_keys
-from quantms_utils_spark.sources.design import read_experimental_design
+from quantms_utils_spark.sources.design import local_table, parse_design
 from quantms_utils_spark.sources.report import read_diann_report
 from quantms_utils_spark.sources.runfiles import HAVE_PYOPENMS
 from quantms_utils_spark.validation import SampleSheetError
@@ -89,7 +92,7 @@ def diann_to_msstats(
     out_dir: str | None = None,
 ) -> DataFrame:
     report = read_diann_report(spark, report_path, qvalue_threshold)
-    s_table, f_table = read_experimental_design(spark, design_path)
+    samples, fractions = parse_design(spark, design_path)
 
     if not HAVE_PYOPENMS:
         logger.warning(
@@ -124,7 +127,7 @@ def diann_to_msstats(
             F.col("IsotopeLabelType").isNotNull()
             & (F.trim(F.col("IsotopeLabelType")) != "")
         )
-        if "Label" not in f_table.columns:
+        if "Label" not in fractions.columns:
             raise SampleSheetError(
                 "multiplexed DIA-NN report (multiple Channel values) but the "
                 "experimental design has no Label column to join on"
@@ -136,19 +139,22 @@ def diann_to_msstats(
         f_cols = ["Fraction", "Sample", "run"]
         merge_keys = ["Run"]
 
-    design_lookup = (
-        s_table.select("Sample", "MSstats_Condition", "MSstats_BioReplicate")
-        .join(f_table.select(*f_cols), "Sample")
-        .withColumnsRenamed(
-            {
+    # The design lookup is built on the driver (null Samples match nothing,
+    # as in a SQL join) and joins the report as one local relation.
+    lookup = (
+        samples[["Sample", "MSstats_Condition", "MSstats_BioReplicate"]]
+        .merge(fractions[f_cols].dropna(subset=["Sample"]), on="Sample")
+        .rename(
+            columns={
                 "run": "Run",
                 "MSstats_BioReplicate": "BioReplicate",
                 "MSstats_Condition": "Condition",
                 "Label": "IsotopeLabelType",
             }
         )
-        .drop("Sample")
+        .drop(columns="Sample")
     )
+    design_lookup = local_table(spark, lookup)
 
     joined = join_many_to_one(out, design_lookup, merge_keys, how="inner")
 

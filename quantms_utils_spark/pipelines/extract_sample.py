@@ -1,9 +1,10 @@
 """openms2sample: experimental-design file → (Spectra_Filepath, Sample) table.
 
 Spark-first reimplementation of quantmsutils/sdrf/extract_sample.py:11-60.
-The mixture branch (reference :41-59) is a per-row O(n·m) python lookup in the
-reference; here it is a left m:1 broadcast join (SURVEY J5) with the same
-missing-key error.
+The design is kilobytes of driver data: it is parsed by the design source's
+legacy-table parse, and the mixture branch (reference :41-59, a per-row
+O(n·m) python lookup) is one pandas left merge with the same missing-key
+error. The result enters Spark as a local relation for the CSV sink.
 """
 
 from __future__ import annotations
@@ -11,11 +12,10 @@ from __future__ import annotations
 import logging
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.functions import broadcast
+from pyspark.sql import DataFrame, SparkSession
 
 from quantms_utils_spark.sinks import write_single_csv
-from quantms_utils_spark.sources.design import _lines_to_sdf, _read_lines, split_two_table_lines
+from quantms_utils_spark.sources.design import local_table, read_legacy_tables
 from quantms_utils_spark.validation import SampleSheetError
 
 logger = logging.getLogger(__name__)
@@ -24,31 +24,29 @@ logger = logging.getLogger(__name__)
 def extract_sample(
     spark: SparkSession, design_path: str, out_dir: str | None = None
 ) -> DataFrame:
-    lines = _read_lines(design_path)
-    top, bottom = split_two_table_lines(lines, design_path)
-    f_table = _lines_to_sdf(spark, top).na.drop()
-    s_table = _lines_to_sdf(spark, bottom)
+    fractions, samples = read_legacy_tables(design_path)
+    fractions = fractions.dropna()
 
-    if "MSstats_Mixture" not in s_table.columns:
-        result = f_table.select("Spectra_Filepath", "Sample")
+    if "MSstats_Mixture" not in samples.columns:
+        result = fractions[["Spectra_Filepath", "Sample"]]
     else:
-        fractions = f_table.dropDuplicates(["Spectra_Filepath"]).select(
-            "Spectra_Filepath", "Sample"
+        joined = (
+            fractions.drop_duplicates("Spectra_Filepath")[["Spectra_Filepath", "Sample"]]
+            .merge(samples[["Sample", "MSstats_Mixture"]], on="Sample", how="left")
         )
-        mixtures = s_table.select("Sample", "MSstats_Mixture")
-        joined = fractions.join(broadcast(mixtures), "Sample", "left")
-        missing = joined.filter(F.col("MSstats_Mixture").isNull()).select("Sample").limit(1).collect()
-        if missing:
+        missing = joined.loc[joined["MSstats_Mixture"].isna(), "Sample"]
+        if len(missing):
             raise SampleSheetError(
-                f"Sample '{missing[0]['Sample']}' in the fraction table has no "
+                f"Sample '{missing.iloc[0]}' in the fraction table has no "
                 "matching entry in the sample table."
             )
-        result = joined.select(
-            "Spectra_Filepath", F.col("MSstats_Mixture").alias("Sample")
+        result = joined[["Spectra_Filepath", "MSstats_Mixture"]].rename(
+            columns={"MSstats_Mixture": "Sample"}
         )
 
+    out = local_table(spark, result)
     if out_dir is not None:
         write_single_csv(
-            result, Path(out_dir) / f"{Path(design_path).stem}_sample.csv", sep="\t"
+            out, Path(out_dir) / f"{Path(design_path).stem}_sample.csv", sep="\t"
         )
-    return result
+    return out

@@ -37,8 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from quantms_utils_spark.operators import exclusive_prefix_sum
 from quantms_utils_spark.operators.dedup import connected_components_star
+from quantms_utils_spark.pipelines.mzml_stats import ms1_ptic
 
 RUN = "reference_file_name"
 
@@ -311,18 +311,7 @@ def detect_features_masstrace(
     min_intensity: float = 0.0,
 ) -> DataFrame:
     """Full mass-trace feature table in the reference's output schema."""
-    ms1 = (
-        spectra.filter(F.col("ms_level") == 1)
-        .filter(F.array_min("mz_array") > min_mz)
-        .withColumn(
-            "tic", F.aggregate("intensity_array", F.lit(0.0), lambda a, x: a + x)
-        )
-    )
-    ms1 = exclusive_prefix_sum(ms1, "tic", [RUN], ["spectrum_index"], out_col="cum_tic")
-    total = F.sum("tic").over(Window.partitionBy(RUN))
-    ptic = ms1.select(
-        RUN, F.col("scan").alias("apex_scan"), (F.col("cum_tic") / total).alias("ptic")
-    )
+    ptic = ms1_ptic(spectra, min_mz).select(RUN, F.col("scan").alias("apex_scan"), "ptic")
 
     traces = detect_mass_traces(
         spectra,

@@ -138,6 +138,22 @@ def compute_ms2_info(spectra: DataFrame) -> DataFrame:
     )
 
 
+def ms1_ptic(spectra: DataFrame, min_mz: float = 1.0) -> DataFrame:
+    """MS1 spectra past the corrupt-spectrum min-m/z filter (P7), each with
+    its TIC (A4) and ``ptic``: the exclusive prefix sum of the run's TIC in
+    spectrum order (W1) over the run's total TIC."""
+    ms1 = (
+        spectra.filter(F.col("ms_level") == 1)
+        .filter(F.array_min("mz_array") > min_mz)
+        .withColumn(
+            "tic", F.aggregate("intensity_array", F.lit(0.0), lambda a, x: a + x)
+        )
+    )
+    ms1 = exclusive_prefix_sum(ms1, "tic", [RUN], _ORDER, out_col="cum_tic")
+    total = F.sum("tic").over(Window.partitionBy(RUN))
+    return ms1.withColumn("ptic", F.col("cum_tic") / total)
+
+
 def detect_features(
     spectra: DataFrame,
     top_n_per_run: int = 20,
@@ -158,16 +174,7 @@ def detect_features(
     scan rts), feature↔scan range join (J6) collecting feature_scans,
     intensity-desc ordering (O1).
     """
-    ms1 = (
-        spectra.filter(F.col("ms_level") == 1)
-        .filter(F.array_min("mz_array") > min_mz)
-        .withColumn(
-            "tic", F.aggregate("intensity_array", F.lit(0.0), lambda a, x: a + x)
-        )
-    )
-    ms1 = exclusive_prefix_sum(ms1, "tic", [RUN], _ORDER, out_col="cum_tic")
-    total = F.sum("tic").over(Window.partitionBy(RUN))
-    ms1 = ms1.withColumn("ptic", F.col("cum_tic") / total)
+    ms1 = ms1_ptic(spectra, min_mz)
 
     base_idx = F.expr(
         "array_position(intensity_array, array_max(intensity_array))"

@@ -1,6 +1,6 @@
 """Experimental-design sources (SURVEY §2.1 S5-S7).
 
-Two wire formats, auto-detected by header sniff (reference
+Two wire formats, told apart by a header sniff (reference
 quantmsutils/diann/diann2msstats.py:149-155):
 
 - unified flat TSV (``Filename/Fraction/Sample/Condition/BioReplicate`` +
@@ -8,18 +8,24 @@ quantmsutils/diann/diann2msstats.py:149-155):
 - legacy two-relations-in-one-file TSV: fraction table, blank line, sample
   table (:222-240, also sdrf/extract_sample.py:28-39).
 
-Design files are kilobyte-scale configuration, so the blank-line split happens
-driver-side (exactly like the reference); both relations come back as Spark
-DataFrames because everything downstream joins them against billion-row fact
-tables as broadcast dimensions.
+A design file is kilobytes of configuration, so it stays driver data, as in
+the reference: both formats go through one pandas table parse
+(:func:`parse_design`), and the label mapping and the Sample →
+(Condition, BioReplicate) check run in pandas. The parse starts no Spark job.
+The one Spark expression it uses is the run stem, ``functions.file_stem`` (the
+engine's one stem rule), evaluated on a local relation that Spark folds on the
+driver. Pipelines hand the tables to Spark as local relations
+(:func:`local_table`) for the one broadcast join against the fact table.
 """
 
 from __future__ import annotations
 
+import io
 from pathlib import Path
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from quantms_utils_spark.functions import file_stem
 from quantms_utils_spark.validation import SampleSheetError, require_unique_mapping
@@ -41,65 +47,28 @@ def _read_lines(path: str) -> list[str]:
     return lines
 
 
-def is_unified_design(path: str) -> bool:
+def _table(lines: list[str]) -> pd.DataFrame:
+    """One TSV table with the cell semantics of Spark's CSV reader: every
+    cell a string, an empty cell null (None), a cell ``NA`` the string
+    ``NA``."""
+    pdf = pd.read_csv(
+        io.StringIO("\n".join(lines)), sep="\t", dtype=str, index_col=False,
+        keep_default_na=False, na_values=[""],
+    )
+    return pdf.astype(object).where(pdf.notna(), None)
+
+
+def local_table(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
+    """A driver-side string table as a Spark local relation: projections and
+    collects over it run on the driver, without a Spark job."""
+    schema = StructType([StructField(c, StringType()) for c in pdf.columns])
+    return spark.createDataFrame(pdf, schema)
+
+
+def read_legacy_tables(path: str) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """The (fraction table, sample table) of a legacy design, split at the
+    first blank line."""
     lines = _read_lines(path)
-    header = lines[0] if lines else ""
-    return all(c in header for c in ("Condition", "BioReplicate", "Filename"))
-
-
-def read_experimental_design(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame]:
-    """Parse a design file into (sample_df, fraction_df) Spark DataFrames.
-
-    sample_df: Sample, MSstats_Condition, MSstats_BioReplicate (+ extras)
-    fraction_df: Fraction, Sample, run (+ Filename/Label when present)
-    """
-    if is_unified_design(path):
-        return _read_unified(spark, path)
-    return _read_legacy(spark, path)
-
-
-def _read_unified(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
-    df = spark.read.csv(path, sep="\t", header=True, inferSchema=False)
-    missing = sorted(set(UNIFIED_REQUIRED) - set(df.columns))
-    if missing:
-        raise SampleSheetError(
-            f"Unified design file is missing required columns: {', '.join(missing)}. "
-            f"Expected: {', '.join(sorted(UNIFIED_REQUIRED))}"
-        )
-    df = df.withColumn("run", file_stem(F.col("Filename")))
-
-    multiplexed = (
-        "Label" in df.columns
-        and df.select(F.countDistinct("Label")).collect()[0][0] > 1
-    )
-    if multiplexed:
-        mapping = {**SILAC_LABELS, **MTRAQ_LABELS}
-        label = F.col("Label")
-        for src, dst in mapping.items():
-            label = F.when(F.col("Label") == src, F.lit(dst)).otherwise(label)
-        df = df.withColumn("Label", label)
-        f_cols = ["Filename", "Fraction", "Sample", "run", "Label"]
-    else:
-        f_cols = ["Filename", "Fraction", "Sample", "run"]
-    f_table = df.select(*f_cols)
-
-    require_unique_mapping(
-        df, "Sample", ("Condition", "BioReplicate"), "experimental design"
-    )
-    s_table = (
-        df.select("Sample", "Condition", "BioReplicate")
-        .distinct()
-        .withColumnsRenamed(
-            {"Condition": "MSstats_Condition", "BioReplicate": "MSstats_BioReplicate"}
-        )
-    )
-    return s_table, f_table
-
-
-def split_two_table_lines(lines: list[str], path: str) -> tuple[list[str], list[str]]:
-    """Split normalized lines of a legacy design at the first blank line."""
     try:
         sep = lines.index("")
     except ValueError:
@@ -107,23 +76,54 @@ def split_two_table_lines(lines: list[str], path: str) -> tuple[list[str], list[
             f"Could not find blank separator row in {path}. Ensure the file "
             "contains a blank line between the file and sample tables."
         ) from None
-    top = lines[:sep]
-    bottom = [ln for ln in lines[sep + 1 :] if ln != ""]
-    return top, bottom
+    return _table(lines[:sep]), _table([ln for ln in lines[sep + 1 :] if ln != ""])
 
 
-def _lines_to_sdf(spark: SparkSession, lines: list[str]) -> DataFrame:
-    header = lines[0].split("\t")
-    rows = [ln.split("\t") for ln in lines[1:]]
-    pdf = pd.DataFrame(rows, columns=header, dtype=str)
-    return spark.createDataFrame(pdf)
+def _with_run(spark: SparkSession, fractions: pd.DataFrame, path_col: str) -> pd.DataFrame:
+    stems = local_table(spark, fractions[[path_col]]).select(file_stem(path_col)).collect()
+    return fractions.assign(run=[r[0] for r in stems])
 
 
-def _read_legacy(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
+def parse_design(spark: SparkSession, path: str) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Parse a design file of either format into (samples, fractions)
+    pandas frames.
+
+    samples: Sample, MSstats_Condition, MSstats_BioReplicate (+ extras)
+    fractions: Fraction, Sample, run (+ Filename/Label when present)
+    """
     lines = _read_lines(path)
-    top, bottom = split_two_table_lines(lines, path)
-    f_table = _lines_to_sdf(spark, top).withColumn(
-        "run", file_stem(F.col("Spectra_Filepath"))
+    header = lines[0] if lines else ""
+    if not all(c in header for c in ("Condition", "BioReplicate", "Filename")):
+        fractions, samples = read_legacy_tables(path)
+        return samples, _with_run(spark, fractions, "Spectra_Filepath")
+
+    df = _table(lines)
+    missing = sorted(set(UNIFIED_REQUIRED) - set(df.columns))
+    if missing:
+        raise SampleSheetError(
+            f"Unified design file is missing required columns: {', '.join(missing)}. "
+            f"Expected: {', '.join(sorted(UNIFIED_REQUIRED))}"
+        )
+    f_cols = ["Filename", "Fraction", "Sample"]
+    if "Label" in df.columns and df["Label"].nunique() > 1:
+        df["Label"] = df["Label"].replace({**SILAC_LABELS, **MTRAQ_LABELS})
+        f_cols.append("Label")
+
+    require_unique_mapping(
+        df, "Sample", ("Condition", "BioReplicate"), "experimental design"
     )
-    s_table = _lines_to_sdf(spark, bottom)
-    return s_table, f_table
+    samples = (
+        df[["Sample", "Condition", "BioReplicate"]]
+        .drop_duplicates()
+        .rename(columns={"Condition": "MSstats_Condition", "BioReplicate": "MSstats_BioReplicate"})
+    )
+    return samples, _with_run(spark, df[f_cols], "Filename")
+
+
+def read_experimental_design(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`parse_design` as (sample_df, fraction_df) Spark local
+    relations."""
+    samples, fractions = parse_design(spark, path)
+    return local_table(spark, samples), local_table(spark, fractions)

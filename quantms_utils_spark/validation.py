@@ -1,14 +1,15 @@
 """Expectations layer: the reference's validation semantics (SURVEY §2.11) as
-reusable helpers. Distributed jobs must fail fast on the driver with the same
-messages the reference raises/exits with — checks here collect a bounded
-list of offenders, never an unbounded key set.
+reusable helpers, raising the messages the reference raises/exits with.
+
+The checks here run on driver-side pandas frames (design and configuration
+tables of at most thousands of rows): no Spark job validates kilobytes.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+import pandas as pd
 
 
 class SampleSheetError(ValueError):
@@ -16,23 +17,14 @@ class SampleSheetError(ValueError):
 
 
 def require_unique_mapping(
-    df: DataFrame, key: str, value_cols: Sequence[str], context: str
+    df: pd.DataFrame, key: str, value_cols: Sequence[str], context: str
 ) -> None:
     """Each key must map to exactly one value tuple
     (diann2msstats.py:205-213)."""
-    from pyspark.sql import functions as F
-
-    dups = (
-        df.select(key, *value_cols)
-        .distinct()
-        .groupBy(key)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(50)
-        .collect()
-    )
-    if dups:
-        bad = ", ".join(str(r[key]) for r in dups)
+    pairs = df[[key, *value_cols]].drop_duplicates()
+    dups = pairs.loc[pairs[key].duplicated(), key].unique()[:50]
+    if len(dups):
+        bad = ", ".join(str(k) for k in dups)
         raise SampleSheetError(
             f"Inconsistent {context}: Sample(s) {bad} map to multiple "
             f"({', '.join(value_cols)}) combinations."

@@ -4,10 +4,11 @@ runs each tool end-to-end via Click's CliRunner)."""
 
 from __future__ import annotations
 
-import textwrap
+import csv
 
 import pytest
 from click.testing import CliRunner
+from test_pipelines import LEGACY_DESIGN, REPORT_TSV
 
 from quantms_utils_spark.cli import cli
 
@@ -19,18 +20,6 @@ COMMANDS = [
     "mzmlstats",
     "psmconvert",
 ]
-
-LEGACY_DESIGN = textwrap.dedent(
-    """\
-    Fraction_Group\tFraction\tSpectra_Filepath\tLabel\tSample
-    1\t1\ta/run_A.mzML\t1\t1
-    2\t1\ta/run_B.mzML\t1\t2
-
-    Sample\tMSstats_Condition\tMSstats_BioReplicate
-    1\tcontrol\t1
-    2\ttreated\t2
-    """
-)
 
 
 @pytest.mark.parametrize("command", COMMANDS)
@@ -64,6 +53,30 @@ def test_dianncfg_unknown_enzyme_exits_nonzero(tmp_path):
     )
     assert result.exit_code == 1
     assert "Unknown enzyme" in result.output
+
+
+def test_diann2msstats_end_to_end(spark, tmp_path):
+    report = tmp_path / "report.tsv"
+    report.write_text(REPORT_TSV)
+    design = tmp_path / "design.tsv"
+    design.write_text(LEGACY_DESIGN)
+    result = CliRunner().invoke(
+        cli,
+        ["diann2msstats", "--diann_report", str(report), "--exp_design", str(design),
+         "--out_dir", str(tmp_path), "--master", "local[2]"],
+    )
+    assert result.exit_code == 0, result.output
+    assert "rows=3" in result.output
+    with open(tmp_path / "design_msstats_in.csv", newline="") as fh:
+        rows = sorted(
+            (r["ProteinName"], r["Run"], r["Condition"], r["BioReplicate"], r["PeptideSequence"])
+            for r in csv.DictReader(fh)
+        )
+    assert rows == [
+        ("P1", "run_A", "control", "1", "PEPTIDE"),
+        ("P2", "run_A", "control", "1", "PEPTIDE"),
+        ("P6", "run_B", "treated", "2", ".(Acetyl)EM(Oxidation)EC(Carbamidomethyl)E"),
+    ]
 
 
 def test_openms2sample_end_to_end(spark, tmp_path):

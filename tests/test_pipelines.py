@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import logging
 import textwrap
+import uuid
 
+import pandas as pd
 import pytest
 
+from quantms_utils_spark.operators.joins import JoinValidationError, join_many_to_one
 from quantms_utils_spark.pipelines.check_samplesheet import check_samplesheet
 from quantms_utils_spark.pipelines.diann2msstats import diann_to_msstats
 from quantms_utils_spark.pipelines.dianncfg import (
@@ -14,6 +18,7 @@ from quantms_utils_spark.pipelines.dianncfg import (
     enzyme_cut,
 )
 from quantms_utils_spark.pipelines.extract_sample import extract_sample
+from quantms_utils_spark.sources.design import read_experimental_design
 from quantms_utils_spark.validation import SampleSheetError
 
 LEGACY_DESIGN = textwrap.dedent(
@@ -61,6 +66,29 @@ REPORT_TSV = textwrap.dedent(
     """
 )
 
+UNIFIED_DESIGN_SILAC = textwrap.dedent(
+    """\
+    Filename\tFraction\tSample\tCondition\tBioReplicate\tLabel
+    run_A.mzML\t1\t1\tcontrol\t1\tSILAC light
+    run_A.mzML\t1\t2\ttreated\t2\tSILAC heavy
+    run_B.mzML\t1\t3\tcontrol\t3\tSILAC light
+    run_B.mzML\t1\t4\ttreated\t4\tSILAC heavy
+    """
+)
+
+# Two samples measured in one run: the design lookup is not unique on Run.
+LEGACY_DESIGN_SHARED_RUN = textwrap.dedent(
+    """\
+    Fraction_Group\tFraction\tSpectra_Filepath\tLabel\tSample
+    1\t1\ta/run_A.mzML\t1\t1
+    2\t1\ta/run_A.mzML\t1\t2
+
+    Sample\tMSstats_Condition\tMSstats_BioReplicate
+    1\tcontrol\t1
+    2\ttreated\t2
+    """
+)
+
 SDRF_VALID = (
     "Source Name\tAssay Name\tComment[data file]\tComment[label]\t"
     "Comment[cleavage agent details]\tComment[instrument]\t"
@@ -74,6 +102,38 @@ def _write(tmp_path, name, content):
     p = tmp_path / name
     p.write_text(content)
     return str(p)
+
+
+def _multiplexed_report(tmp_path):
+    """A DIA-NN parquet report with two Channel values (the TSV branch of
+    the report source does not read Channel)."""
+    path = tmp_path / "report_plex.parquet"
+    pd.DataFrame(
+        {
+            "Run": ["run_A", "run_A", "run_B", "run_B", "run_B"],
+            "Protein.Names": ["P1", "P2", "P3", "P4", "P5"],
+            "Modified.Sequence": ["PEPTIDE", "PEPTIDE", "AAAA", "CCCC", "DDDD"],
+            "Precursor.Charge": [2, 2, 2, 3, 2],
+            "Precursor.Quantity": [100.0, 200.0, 300.0, 400.0, 500.0],
+            "Q.Value": [0.001] * 5,
+            "Decoy": [0] * 5,
+            "Channel": ["L", "H", "L", "H", "M"],
+        }
+    ).to_parquet(path)
+    return str(path)
+
+
+def _spark_jobs(spark, call):
+    """Run ``call()`` inside a fresh job group; return how many Spark jobs
+    it started."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TestDiann2MSstats:
@@ -145,6 +205,79 @@ class TestDiann2MSstats:
         assert target.is_file()
         header = target.read_text().splitlines()[0]
         assert "PeptideSequence" in header
+
+
+    def test_multiplexed_joins_on_run_and_label(self, spark, tmp_path):
+        report = _multiplexed_report(tmp_path)
+        design = _write(tmp_path, "silac.tsv", UNIFIED_DESIGN_SILAC)
+        out = diann_to_msstats(spark, report, design)
+        rows = {
+            r["ProteinName"]: (r["Run"], r["IsotopeLabelType"], r["Condition"], r["BioReplicate"])
+            for r in out.collect()
+        }
+        # Channel M has no SILAC medium sample in the design: dropped.
+        assert rows == {
+            "P1": ("run_A", "L", "control", "1"),
+            "P2": ("run_A", "H", "treated", "2"),
+            "P3": ("run_B", "L", "control", "3"),
+            "P4": ("run_B", "H", "treated", "4"),
+        }
+
+    def test_multiplexed_without_label_column(self, spark, tmp_path):
+        report = _multiplexed_report(tmp_path)
+        design = _write(tmp_path, "uni_design.tsv", UNIFIED_DESIGN)
+        with pytest.raises(SampleSheetError, match="no Label column"):
+            diann_to_msstats(spark, report, design)
+
+    def test_one_run_for_two_samples(self, spark, tmp_path):
+        report = _write(tmp_path, "report.tsv", REPORT_TSV)
+        design = _write(tmp_path, "shared.tsv", LEGACY_DESIGN_SHARED_RUN)
+        with pytest.raises(JoinValidationError, match="duplicate keys.*run_A"):
+            diann_to_msstats(spark, report, design)
+
+    def test_unmatched_run_warning(self, spark, tmp_path, caplog):
+        report = _write(tmp_path, "report.tsv", REPORT_TSV)
+        design = _write(tmp_path, "design.tsv", LEGACY_DESIGN)
+        logger = "quantms_utils_spark.pipelines.diann2msstats"
+        with caplog.at_level(logging.WARNING, logger=logger):
+            diann_to_msstats(spark, report, design)
+        warnings = [r.getMessage() for r in caplog.records if "no match" in r.getMessage()]
+        assert len(warnings) == 1
+        assert warnings[0].startswith("1 run(s)") and "run_MISSING" in warnings[0]
+
+    def test_unified_na_cell_is_a_string(self, spark, tmp_path):
+        """As with Spark's CSV reader, ``NA`` in a design cell is the string
+        ``NA``, not a missing value."""
+        report = _write(tmp_path, "report.tsv", REPORT_TSV)
+        design = _write(
+            tmp_path, "na.tsv", UNIFIED_DESIGN.replace("treated", "NA")
+        )
+        out = diann_to_msstats(spark, report, design)
+        assert {r["Run"]: r["Condition"] for r in out.collect()} == {
+            "run_A": "control",
+            "run_B": "NA",
+        }
+
+
+class TestDesignWithoutJobs:
+    """A design file is driver data: reading it, and checking a local
+    dimension before the broadcast join, start no Spark job."""
+
+    @pytest.mark.parametrize("content", [UNIFIED_DESIGN, LEGACY_DESIGN], ids=["unified", "legacy"])
+    def test_read_experimental_design(self, spark, tmp_path, content):
+        design = _write(tmp_path, "design.tsv", content)
+        tables = []
+        assert _spark_jobs(spark, lambda: tables.extend(read_experimental_design(spark, design))) == 0
+        s_table, f_table = tables
+        assert sorted(r["run"] for r in f_table.collect()) == ["run_A", "run_B"]
+        assert sorted(r["MSstats_Condition"] for r in s_table.collect()) == ["control", "treated"]
+
+    def test_join_many_to_one_local_dimension(self, spark):
+        fact = spark.range(10).selectExpr("CAST(id % 3 AS STRING) AS k", "id")
+        dim = spark.createDataFrame(pd.DataFrame({"k": ["0", "1", "2"], "v": ["a", "b", "c"]}))
+        joined = []
+        assert _spark_jobs(spark, lambda: joined.append(join_many_to_one(fact, dim, "k"))) == 0
+        assert joined[0].count() == 10
 
 
 class TestExtractSample:
