@@ -10,6 +10,8 @@ range-join feature scans, and the PSM↔spectrum join."""
 from __future__ import annotations
 
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from quantms_utils_spark.pipelines.mzml_stats import (
@@ -214,6 +216,92 @@ class TestMs2InfoAndSinks:
         plan = explain_str(df, "formatted")
         assert "PartitionFilters: [isnotnull(reference_file_name" in plan
         assert df.count() > 0
+
+
+def _logged_spectra(spark, runs, log):
+    """``read_spectra(runs, parser="xml")`` whose per-file parse appends the
+    path to ``log``: the log then holds one line per parse of a run file."""
+    from quantms_utils_spark.sources.mzml import SPECTRUM_SCHEMA, parse_mzml_file
+    from quantms_utils_spark.sources.runfiles import map_run_files
+
+    log = str(log)
+
+    def parse(path):
+        with open(log, "a") as fh:
+            fh.write(path + "\n")
+        return parse_mzml_file(path, "xml")
+
+    return map_run_files(spark, runs, parse, SPECTRUM_SCHEMA, "logged_spectra")
+
+
+def _parses(log) -> list[str]:
+    return sorted(log.read_text().splitlines()) if log.exists() else []
+
+
+def _persistent_rdds(spark) -> set[int]:
+    """Ids of the persisted RDDs. Compared as ``after <= before``: older
+    checkpoint blocks may be released by the JVM's cleaner meanwhile."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+class TestWriteTablesParseOnce:
+    """``write_tables`` parses each run file once per call, whatever tables
+    it writes, and leaves no cached data behind."""
+
+    @pytest.mark.parametrize("method", ["seed", "masstrace"])
+    def test_one_parse_per_run(self, spark, runs, tmp_path, method):
+        log = tmp_path / "parses.log"
+        outputs = write_tables(
+            _logged_spectra(spark, runs, log), str(tmp_path / "out"), "s",
+            ms2_file=True, feature_detection=True, feature_method=method,
+        )
+        assert set(outputs) == {"ms_info", "ms2_info", "ms1_features"}
+        assert _parses(log) == sorted(runs)
+
+    def test_no_pin_left_after_return(self, spark, runs, tmp_path):
+        # The seed finder: the mass-trace finder's connected components
+        # localCheckpoint, and those blocks live until the JVM collects them.
+        before = _persistent_rdds(spark)
+        spectra = read_spectra(spark, runs, parser="xml")
+        write_tables(spectra, str(tmp_path), "s", ms2_file=True,
+                     feature_detection=True, feature_method="seed")
+        assert _persistent_rdds(spark) <= before
+        assert spectra.storageLevel == StorageLevel.NONE
+
+    def test_no_pin_left_after_failed_sink(self, spark, runs, tmp_path):
+        plain_file = tmp_path / "not_a_dir"
+        plain_file.write_text("")
+        before = _persistent_rdds(spark)
+        spectra = read_spectra(spark, runs, parser="xml")
+        with pytest.raises(Py4JJavaError, match="ParentNotDirectoryException"):
+            write_tables(spectra, str(plain_file), "s", ms2_file=True)
+        assert _persistent_rdds(spark) <= before
+        assert spectra.storageLevel == StorageLevel.NONE
+
+    def test_no_pin_left_after_failure_past_first_write(self, spark, runs, tmp_path):
+        """ms_info is written (the stored rows exist) before the feature
+        step raises on an unknown option."""
+        before = _persistent_rdds(spark)
+        spectra = read_spectra(spark, runs, parser="xml")
+        with pytest.raises(TypeError):
+            write_tables(spectra, str(tmp_path), "s", feature_detection=True,
+                         feature_method="seed", feature_options={"no_such": 1})
+        assert (tmp_path / "s_ms_info.parquet").is_dir()
+        assert _persistent_rdds(spark) <= before
+        assert spectra.storageLevel == StorageLevel.NONE
+
+    def test_callers_cache_survives(self, spark, runs, tmp_path):
+        log = tmp_path / "parses.log"
+        spectra = _logged_spectra(spark, runs, log).persist(StorageLevel.MEMORY_ONLY)
+        try:
+            n = spectra.count()
+            write_tables(spectra, str(tmp_path / "out"), "s", ms2_file=True,
+                         feature_detection=True, feature_method="seed")
+            assert spectra.storageLevel == StorageLevel.MEMORY_ONLY
+            assert spectra.count() == n
+            assert _parses(log) == sorted(runs)
+        finally:
+            spectra.unpersist()
 
 
 class TestFeatures:

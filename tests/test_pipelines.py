@@ -5,6 +5,7 @@ from __future__ import annotations
 import logging
 import textwrap
 import uuid
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -734,12 +735,14 @@ class TestPXD000001CacheOnly:
 
     SHEET = "/root/reference/tests/test_data/PXD000001.sdrf.tsv"
 
+    @pytest.mark.skipif(not Path(SHEET).exists(), reason="PXD000001 sheet not present")
     def test_full_cache_only_green(self, spark):
         errors = check_samplesheet(
             spark, self.SHEET, minimal=False, use_ols_cache_only=True
         )
         assert errors == []
 
+    @pytest.mark.skipif(not Path(SHEET).exists(), reason="PXD000001 sheet not present")
     def test_minimal_still_flags_acquisition_method(self, spark):
         # reference parity: tests/test_commands.py::test_check_samplesheet_
         # minimal_pxd000001 expects exactly this failure under --minimal
